@@ -27,26 +27,23 @@ object Tables {
     spark
   }
 
-  /** Resolved-relation cache keyed by (session, path) — the catalog
-    * pattern (guide §6: file listing / footer schema reads are
-    * driver-side work a real deployment pays ONCE via its metastore or
-    * table-format manifests, not per query). Caches only the PLAN
-    * (LogicalRelation: file index + schema); no data is persisted and
-    * every action still scans the parquet from disk. FloorLab (r20)
-    * measured ~40–60 ms of the ~90 ms per-query driver build inside
-    * `spark.read.parquet` re-resolution; across 197 queries × 3 passes
-    * that is pure floor. The test data is immutable (TESTDATA.md), and
-    * tools that regenerate derived dirs (ScaleGen/BoilerGen) use fresh
-    * sessions, so staleness cannot arise within a keyed session.
+  /** Resolved relations are memoized per (session, path) in
+    * [[SessionMemo]] — the catalog pattern (guide §6: file listing /
+    * footer schema reads are driver-side work a real deployment pays
+    * ONCE via its metastore or table-format manifests, not per query).
+    * Only the PLAN (LogicalRelation: file index + schema) is kept; no
+    * data is persisted and every action still scans the parquet from
+    * disk. FloorLab (r20) measured ~40–60 ms of the ~90 ms per-query
+    * driver build inside `spark.read.parquet` re-resolution; across 197
+    * queries × 3 passes that is pure floor. The test data is immutable
+    * (TESTDATA.md), and tools that regenerate derived dirs
+    * (ScaleGen/BoilerGen) use fresh sessions, so staleness cannot arise
+    * within a session.
     */
-  private val frames =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     configure(spark)
-    if (frames.size > 256) frames.clear() // bound: sessions × tables is tiny
-    frames.getOrElseUpdate((spark, s"$dir/$name.parquet"),
-      spark.read.parquet(s"$dir/$name.parquet"))
+    val path = s"$dir/$name.parquet"
+    SessionMemo.getOrElseUpdate(spark, path)(spark.read.parquet(path))
   }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")

@@ -132,17 +132,6 @@ object Pipeline {
   private[graft] val sqlCacheCfgs =
     scala.collection.concurrent.TrieMap.empty[String, SqlCacheCfg]
 
-  /** Observations attached by `metric` processors in the current
-    * pipeline compile, drained into the metrics exporter at flush —
-    * the path a custom metric takes from plan to exposition text
-    * (config/examples/site_analytics.yaml, track_benthos_downloads).
-    * (name, type, observation) — the LABEL-LESS form; labeled metrics
-    * ride [[pendingLabeledMetrics]] with per-label-set readings.
-    */
-  private[graft] val pendingMetricObs =
-    new java.util.concurrent.ConcurrentLinkedQueue[
-      (String, String, org.apache.spark.sql.Observation)]
-
   /** Per-label-set readings for LABELED `metric` processors: key = the
     * JSON array of interpolated label values, value = (count,
     * gauge-max). Accumulated inside the SAME action as the flow (no
@@ -173,9 +162,25 @@ object Pipeline {
     def value: Map[String, (Long, Double)] = synchronized { m.toMap }
   }
 
-  private[graft] val pendingLabeledMetrics =
-    new java.util.concurrent.ConcurrentLinkedQueue[
+  /** Readings of the `metric` processors applied inside ONE [[run]],
+    * exported by that run's `metrics:` block — the path a custom metric
+    * takes from plan to exposition text (config/examples/
+    * site_analytics.yaml, track_benthos_downloads). `observed` holds
+    * the LABEL-LESS form (name, type, observation); `labeled` the
+    * per-label-set accumulators. A metric belongs to its own run, as
+    * in the reference (§2.14): readings of a `build` or `runStream`,
+    * or of another run, never reach this run's exporter.
+    */
+  private[graft] final class MetricReadings {
+    val observed = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, String, org.apache.spark.sql.Observation)]
+    val labeled = new java.util.concurrent.ConcurrentLinkedQueue[
       (String, String, Seq[String], MetricAcc)]
+  }
+
+  /** The readings of the [[run]] on this thread; None outside a run. */
+  private[graft] val runReadings =
+    new scala.util.DynamicVariable[Option[MetricReadings]](None)
 
   /** One resolvable level for the kernel-form cache processor: a
     * memory-family live store (per-JVM), a file directory (coherent
@@ -698,6 +703,14 @@ object Pipeline {
   /** Build and execute through the output; returns the final frame. */
   def run(spark: SparkSession, configYaml0: String,
           env: Map[String, String] = Map.empty): DataFrame = {
+    val readings = new MetricReadings
+    runReadings.withValue(Some(readings))(
+      runCollecting(spark, configYaml0, env, readings))
+  }
+
+  private def runCollecting(spark: SparkSession, configYaml0: String,
+                            env: Map[String, String],
+                            readings: MetricReadings): DataFrame = {
     val configYaml = substEnv(configYaml0, env)
     val spec = load(configYaml)
     val df0 = build(spark, configYaml, env)
@@ -722,7 +735,7 @@ object Pipeline {
           // the same tolerance the reference's counters have)
           if (partsAcc.value == 0L && counted.rdd.getNumPartitions > 0)
             counted.write.format("noop").mode("overwrite").save()
-          exportMetrics(spark, m, rowsAcc.value)
+          exportMetrics(spark, m, rowsAcc.value, readings)
         }))
       case None => (df0, None)
     }
@@ -784,13 +797,13 @@ object Pipeline {
     * metrics_prometheus.go, metrics_influxdb.go shapes).
     */
   private def exportMetrics(spark: SparkSession, m0: JsonNode,
-                            rows: Long): Unit = {
+                            rows: Long, readings: MetricReadings): Unit = {
     import graft.operators.MetricsExport
     val reg = new MetricsExport.Registry
     reg.counter("output_sent").addAndGet(rows)
     reg.counter("input_received").addAndGet(rows)
     // custom metric-processor observations land in the same registry
-    var pending = Pipeline.pendingMetricObs.poll()
+    var pending = readings.observed.poll()
     while (pending != null) {
       val (name, kind, obs) = pending
       // non-blocking read of the completed observation (getOrEmpty is
@@ -806,10 +819,10 @@ object Pipeline {
         case _ => reg.counter(name).addAndGet(
           String.valueOf(vals.getOrElse("count", 0L)).toLong)
       }
-      pending = Pipeline.pendingMetricObs.poll()
+      pending = readings.observed.poll()
     }
     // labeled metric processors: per-label-set accumulator readings
-    var lp = Pipeline.pendingLabeledMetrics.poll()
+    var lp = readings.labeled.poll()
     while (lp != null) {
       val (name, kind, labelNames, acc) = lp
       val jm = new ObjectMapper()
@@ -824,7 +837,7 @@ object Pipeline {
           case _ => reg.counter(name, labels).addAndGet(cnt); ()
         }
       }
-      lp = Pipeline.pendingLabeledMetrics.poll()
+      lp = readings.labeled.poll()
     }
     // `metrics.mapping` renames/drops metric NAMES before exposition
     // (config/examples/site_analytics.yaml filters to its own counter).
@@ -3203,27 +3216,19 @@ object Processors {
         }
       case "try" =>
         // processors/try.adoc:26 — children skip already-errored rows
-        val procs = children(body, env)
-        df => {
-          val d = FlowControl.withErrorChannel(df)
-          procs(d.filter(col("error").isNull))
-            .unionByName(d.filter(col("error").isNotNull),
-              allowMissingColumns = true)
-        }
+        tryEach(childList(body, env))
       case "try_catch" =>
         // processors/try_catch.adoc — try semantics over `processors`;
         // failures move into a metadata object ({"what": …}, field
         // `error_metadata`) with the flag CLEARED before `catch` runs,
         // so recovery reads @error.what and new catch-side failures
         // surface as fresh errors
-        val procs = children(Option(body.get("processors")).orNull, env)
+        val procs = tryEach(
+          childList(Option(body.get("processors")).orNull, env))
         val catchProcs = children(Option(body.get("catch")).orNull, env)
         val errField = body.path("error_metadata").asText("error")
         df => {
-          val d = FlowControl.withErrorChannel(df)
-          val tried = procs(d.filter(col("error").isNull))
-            .unionByName(d.filter(col("error").isNotNull),
-              allowMissingColumns = true)
+          val tried = procs(df)
           val ok = tried.filter(col("error").isNull)
           val cleared = tried.filter(col("error").isNotNull)
             .withColumn("metadata", metaPut(metaColOf(tried),
@@ -3470,7 +3475,8 @@ object Processors {
             case _ =>
               Observe.metric(df, name, Seq(count(lit(1)).as("count")))
           }
-          Pipeline.pendingMetricObs.add((name, mtype, obs))
+          Pipeline.runReadings.value
+            .foreach(_.observed.add((name, mtype, obs)))
           d
         }
         else df => {
@@ -3488,8 +3494,8 @@ object Processors {
           else lit(Double.NegativeInfinity)
           val acc = new Pipeline.MetricAcc
           df.sparkSession.sparkContext.register(acc, s"graft_metric_$name")
-          Pipeline.pendingLabeledMetrics.add(
-            (name, mtype, labelTpls.map(_._1), acc))
+          Pipeline.runReadings.value.foreach(
+            _.labeled.add((name, mtype, labelTpls.map(_._1), acc)))
           val tagged = df.withColumn("__mlv", lvC).withColumn("__mgv", gvC)
           val schema = tagged.schema
           implicit val enc = org.apache.spark.sql.Encoders.row(schema)
@@ -4684,10 +4690,40 @@ object Processors {
         body.path("secret_key").asText("SK")),
       body.path("region").asText("us-east-1"))
 
-  private def children(n: JsonNode, env: Map[String, String]): DataFrame => DataFrame =
+  private def childList(n: JsonNode,
+                        env: Map[String, String]): Seq[DataFrame => DataFrame] =
     Option(n).map(_.elements().asScala.toSeq).getOrElse(Seq.empty)
       .map(compile(_, env))
-      .reduceOption(_ andThen _).getOrElse((df: DataFrame) => df)
+
+  private def children(n: JsonNode, env: Map[String, String]): DataFrame => DataFrame =
+    childList(n, env).reduceOption(_ andThen _)
+      .getOrElse((df: DataFrame) => df)
+
+  /** try semantics (processors/try.adoc): each child runs over the rows
+    * no earlier child errored; an errored row skips the rest. The rows
+    * set aside at each step join the last child's output in one union.
+    * Each step reads its input twice (healthy and errored slices), so a
+    * batch plan barriers every child's output that a later child reads
+    * (eager localCheckpoint): each child runs once per row, which the
+    * side-effecting ones (`http`, a labeled `metric`, `log`) need. A
+    * single child needs no barrier. Streaming plans cannot checkpoint:
+    * their children run as one chain over the healthy slice, so there a
+    * row an earlier child errored still reaches the later children.
+    */
+  private def tryEach(procs: Seq[DataFrame => DataFrame]): DataFrame => DataFrame =
+    df => {
+      val d = FlowControl.withErrorChannel(df)
+      val steps =
+        if (d.isStreaming) procs.reduceOption(_ andThen _).toSeq else procs
+      val (out, skipped) = steps.zipWithIndex.foldLeft(
+          (d, List.empty[DataFrame])) {
+        case ((prev, skip), (p, i)) =>
+          val cur = if (i == 0) prev else prev.localCheckpoint()
+          (p(cur.filter(col("error").isNull)),
+            cur.filter(col("error").isNotNull) :: skip)
+      }
+      (out :: skipped).reduce(_.unionByName(_, allowMissingColumns = true))
+    }
 
   private def argvOf(body: JsonNode): Seq[String] = {
     val name = body.get("name").asText

@@ -3,12 +3,16 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.SessionMemo
 import graft.functions.TextFunctions._
 import graft.functions.expressions.GraftFunctions
 
 /** Deduplication operators for document corpora, designed for the
   * 100 TB path: every variant is a pure DataFrame plan (scan → narrow
-  * per-row hashing → one shuffle on the dedup key), no driver-side state.
+  * per-row hashing → one shuffle on the dedup key). No driver-side state
+  * outlives a session: the miners' plan decisions are memoized in the
+  * calling session's [[graft.SessionMemo]], and the only process-wide
+  * structure is the FIFO of staging tables released by [[releaseStaged]].
   *
   * Reference semantics: the `dedupe` processor drops messages whose key
   * was already seen (docs/modules/components/pages/processors/dedupe.adoc:26,
@@ -16,29 +20,6 @@ import graft.functions.expressions.GraftFunctions
   * exact and near-duplicate detection.
   */
 object Dedupe {
-
-  /** Duplicate-mass decisions keyed by (canonicalized input plan hash,
-    * text column) — see [[ngramJaccardPairs]]. Bounded: cleared when it
-    * grows past 1024 entries (each entry is one boolean).
-    */
-  private val dupStatsCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), Boolean]
-  private def cacheGuard(): Unit =
-    if (dupStatsCache.size > 1024) dupStatsCache.clear()
-
-  /** Edge-count predictions for staged miner outputs, keyed by the
-    * result plan's semanticHash: exact cross-group count + an upper
-    * bound on within-group pairs, both computable from the PERSISTED
-    * rep-level staging tables in milliseconds. [[resolveClusters]]
-    * consults (and consumes) this to pick its driver-collect protocol
-    * without paying a full expansion pass for the decision. Stored as
-    * thunks so miners whose output never reaches resolveClusters
-    * (e.g. the pair gates) pay nothing.
-    */
-  private val predictedEdges =
-    scala.collection.concurrent.TrieMap.empty[Int, () => Long]
-  private def predictionGuard(): Unit =
-    if (predictedEdges.size > 256) predictedEdges.clear()
 
   // persisted membership tables from stagedByExactDup, evicted FIFO —
   // the returned pair frame is lazy so the function can't unpersist
@@ -172,7 +153,8 @@ object Dedupe {
     // and whitespace-variant duplicates it misses are rare, while the
     // byte-identical replication that dominates real dup mass is caught
     // at a fraction of the md5+regexp cost. The decision memoizes per
-    // canonicalized input plan (ANALYZE-once statistics reuse): it is a
+    // session and canonicalized input plan (ANALYZE-once statistics
+    // reuse, [[graft.SessionMemo]]): it is a
     // table property, re-deriving it on every invocation re-scans for a
     // bit that cannot change the result, and staleness can only ever
     // pick the slower of two byte-identical plans.
@@ -215,19 +197,18 @@ object Dedupe {
 
   /** Shared duplicate-mass estimator (see [[ngramJaccardPairs]] for the
     * full rationale): one narrow xxhash64 approx-distinct pass, decision
-    * memoized per canonicalized input plan. Both near-dup miners use it
-    * to choose direct vs exact-dup-collapse staging.
+    * memoized per session and canonicalized input plan. Both near-dup
+    * miners use it to choose direct vs exact-dup-collapse staging.
     */
   private def nearDistinctCorpus(docs: DataFrame, textCol: String): Boolean = {
-    Dedupe.cacheGuard()
     val statsKey = (docs.queryExecution.analyzed.semanticHash(), textCol)
-    Dedupe.dupStatsCache.getOrElseUpdate(statsKey, {
+    SessionMemo.getOrElseUpdate(docs.sparkSession, statsKey) {
       val dupStats = docs
         .agg(count(lit(1)).as("n"),
           approx_count_distinct(xxhash64(col(textCol))).as("d"))
         .head()
       dupStats.getLong(1).toDouble >= 0.9 * dupStats.getLong(0).toDouble
-    })
+    }
   }
 
   /** The exact-dup collapse staging, generalized over the rep-level
@@ -279,26 +260,7 @@ object Dedupe {
         col("a.rep") === col("b.rep") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         lit(1.0).as("jaccard"))
-    val result = cross.unionByName(within)
-    // edge-count prediction for resolveClusters: exact cross count
-    // (Σ |group_a|×|group_b| over rep pairs) plus an upper bound on
-    // within-group pairs (Σ C(n,2) over ALL groups — the nonempty-
-    // shingle filter only removes pairs, so the bound is conservative).
-    // Both are rep-level aggregates over the persisted staging tables.
-    predictionGuard()
-    predictedEdges.put(
-      result.queryExecution.analyzed.semanticHash(), () => {
-        val sizes = members.groupBy(col("rep")).agg(count(lit(1)).as("n"))
-        val crossRow = repPairs
-          .join(sizes.select(col("rep").as("id_a"), col("n").as("na")), "id_a")
-          .join(sizes.select(col("rep").as("id_b"), col("n").as("nb")), "id_b")
-          .agg(sum(col("na") * col("nb"))).head()
-        val withinRow =
-          sizes.agg(sum(col("n") * (col("n") - lit(1)))).head()
-        (if (crossRow.isNullAt(0)) 0L else crossRow.getLong(0)) +
-          (if (withinRow.isNullAt(0)) 0L else withinRow.getLong(0)) / 2
-      })
-    result
+    cross.unionByName(within)
   }
 
   /** The direct (no exact-dup collapse) pair join — see
@@ -355,7 +317,7 @@ object Dedupe {
   /** The pure co-occurrence-count plan (the r19 shape) — the fast path
     * for corpora whose shingle df profile keeps Σ C(df,2) near-linear.
     */
-  private[operators] def countPairs(ex: DataFrame,
+  private[graft] def countPairs(ex: DataFrame,
                                     threshold: Double): DataFrame = {
     val inter = count(lit(1)).cast("double")
     val pairs = ex.as("a").join(ex.as("b"),
@@ -379,7 +341,7 @@ object Dedupe {
   /** Fan-out census for the direct miner's plan choice: one narrow
     * map-side-aggregated pass over the inverted index computes the
     * EXACT count-plan join volume Σ_s C(df(s), 2) and the index size
-    * Σ_s df(s). The decision memoizes per canonicalized index plan
+    * Σ_s df(s). The decision memoizes per session and index plan
     * (same table-property justification as [[nearDistinctCorpus]]):
     * both candidate plans are byte-identical in output, so staleness
     * can only ever pick the slower one. Crossover measured r20
@@ -401,18 +363,19 @@ object Dedupe {
     * way, and that regime is the LSH miner's territory anyway.
     */
   private val fanoutCap = 256.0
-  private[operators] def boilerplateHeavy(ex: DataFrame): Boolean = {
-    cacheGuard()
+  private[graft] def boilerplateHeavy(ex: DataFrame): Boolean = {
     val key = (ex.queryExecution.analyzed.semanticHash(), "__fanout")
-    dupStatsCache.getOrElseUpdate(key, {
+    SessionMemo.getOrElseUpdate(ex.sparkSession, key) {
       val row = ex.groupBy(col("s"))
         .agg(count(lit(1)).cast("double").as("df"))
         .agg(sum(col("df")).as("n"),
           sum(col("df") * (col("df") - lit(1.0)) / 2.0).as("fanout"))
         .head()
-      val n = math.max(1.0, row.getDouble(0))
-      row.getDouble(1) > fanoutCap * n
-    })
+      // an empty index (empty corpus, or every doc shorter than the
+      // shingle size) has no shingles: both sums are null, no fan-out
+      !row.isNullAt(1) &&
+        row.getDouble(1) > fanoutCap * math.max(1.0, row.getDouble(0))
+    }
   }
 
   /** PPJoin-style prefix-filtered pairs under a GLOBAL (df asc, hash
@@ -428,7 +391,7 @@ object Dedupe {
     * extra shuffles (df join, per-doc window) + the candidate distinct
     * + two verify joins — flat in boilerplate mass, which is the point.
     */
-  private[operators] def prefixFilteredPairs(sets: DataFrame, ex: DataFrame,
+  private[graft] def prefixFilteredPairs(sets: DataFrame, ex: DataFrame,
                                   threshold: Double): DataFrame = {
     val dfs = ex.groupBy(col("s")).agg(count(lit(1)).as("df"))
     val w = Window.partitionBy(col("id")).orderBy(col("df"), col("s"))
@@ -498,36 +461,36 @@ object Dedupe {
     * rep = smallest id in its component — the canonical document the
     * cluster keeps.
     *
-    * Scale/latency notes: two adaptive regimes. Edge lists that fit on
-    * the driver resolve by exact union-find (instant); beyond that,
-    * alternating LARGE-STAR / SMALL-STAR contraction (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond") — O(log d) rounds
+    * Scale/latency notes: one protocol, two regimes. ONE fused pass
+    * over the edge list counts every partition and keeps up to
+    * `driverMaxEdges`+1 rows per partition. If the total fits, those
+    * rows resolve on the driver by exact union-find. Otherwise the edge
+    * list is cached (MEMORY_AND_DISK) from the same execution — its
+    * shuffles are not re-run — and alternating LARGE-STAR / SMALL-STAR
+    * contraction (Kiveris et al., "Connected Components in MapReduce
+    * and Beyond") runs over that cache — O(log d) rounds
     * for diameter d, and round 1's distinct collapses dense components
     * (near-dup clusters are cliques) to stars, so later rounds touch
     * node-sized data instead of re-joining the full edge list the way
     * the r14 delta-iteration label propagation did (sf30, 224 M edges:
     * 161 s delta vs star rounds that shrink after the first pass).
-    * `roundsPerCheck` is retained for source compatibility; contraction
-    * checks its fixpoint every round from a count+hash aggregate.
+    * Contraction checks its fixpoint every round from a count+hash
+    * aggregate. Both regimes emit identical (id, min-rep) labels,
+    * pinned by spec.
     */
   def resolveClusters(pairs: DataFrame, maxIter: Int = 20,
-                      roundsPerCheck: Int = 2,
                       driverMaxEdges: Long = 2000000L): DataFrame = {
-    // ADAPTIVE: near-dup pair lists are duplicate-density-sized, not
-    // corpus-sized — when the whole edge list fits on the driver,
-    // iterative Spark label propagation is pure fixed overhead (each
-    // check block is a fresh plan+codegen cycle — ~3 s even on a
-    // 25-edge graph) and union-find on the driver is exact and
-    // instant; past the threshold the star-contraction path costs
-    // ~one full-volume round before the edge set collapses, so the
+    // Near-dup pair lists are duplicate-density-sized, not
+    // corpus-sized. When the whole edge list fits on the driver,
+    // iterative Spark rounds are pure fixed overhead (each is a fresh
+    // plan+codegen cycle — ~3 s even on a 25-edge graph) and union-find
+    // is exact and instant; past the cap, contraction costs ~one
+    // full-volume round before the edge set collapses, so the
     // crossover is flat (sf3's 2.2 M-edge rung measured FASTER
-    // distributed than the r13 driver path did). Memory math
-    // at the 2 M default: ~16 B/edge retained in the long arrays +
-    // ~64 B/edge transient boxed tuples ≈ 160 MB peak — safe at
-    // default driver heaps. The distributed path below stays the
-    // shape for beyond-driver edge volumes; IVF makes the same
-    // centroids-on-driver call. Both paths emit identical
-    // (id, min-rep) labels, pinned by spec.
+    // distributed than the r13 driver path did). Memory math at the
+    // 2 M default: ~16 B/edge retained in the long arrays + ~64 B/edge
+    // transient boxed tuples ≈ 160 MB peak — safe at default driver
+    // heaps. IVF makes the same centroids-on-driver call.
     val spark = pairs.sparkSession
     import spark.implicits._
     val cap = math.min(driverMaxEdges, (Int.MaxValue - 8).toLong)
@@ -554,70 +517,35 @@ object Dedupe {
       ids.toSeq.map(id => (id, find(id))).toDF("id", "rep")
     }
 
-    // ── OOM guard, three protocols (r16; VERDICT r15 #3) ─────────────
-    // The driver path's edge list is consumed exactly once (the
-    // collect), so the r15 persist-then-count paid a columnar cache
-    // build for nothing there. Now:
-    //  1. a staged miner PREDICTED the edge count from its rep-level
-    //     tables: ≤ cap → one unpersisted pass collects directly (no
-    //     cache build, no second scan); > cap → straight to the
-    //     distributed protocol, skipping the probe.
-    //  2. unpredicted input: ONE fused pass counts every partition and
-    //     keeps up to cap+1 rows per partition — if the total fits,
-    //     those rows ARE the collect. Only an unpredicted >cap edge
-    //     list (a near-distinct corpus with >2 M near-dup pairs — none
-    //     of the ladder's rungs) pays the probe AND the distributed
-    //     materialization.
-    val rawPlan = pairs.select(col("id_a"), col("id_b"))
-    val predicted = predictedEdges
-      .remove(pairs.queryExecution.analyzed.semanticHash()).map(_())
-    predicted match {
-      case Some(p) if p <= cap =>
-        return unionFind(rawPlan.as[(Long, Long)].collect())
-      case Some(_) => () // provably big: fall through to contraction
-      case None =>
-        val capL = cap
-        val perPart: Array[(Long, Array[(Long, Long)])] =
-          rawPlan.as[(Long, Long)].rdd.mapPartitions { it =>
-            val buf =
-              new scala.collection.mutable.ArrayBuffer[(Long, Long)](1024)
-            var n = 0L
-            var keep = true
-            while (it.hasNext) {
-              val x = it.next(); n += 1
-              if (keep) {
-                if (n <= capL + 1) buf += x
-                else { buf.clear(); keep = false }
-              }
-            }
-            Iterator.single((n, if (keep) buf.toArray else null))
-          }.collect()
-        val n = perPart.map(_._1).sum
-        if (n <= cap && perPart.forall(_._2 != null))
-          return unionFind(Array.concat(perPart.map(_._2): _*))
-        Console.err.println(s"[dedupe] OOM-guard probe overflowed " +
-          s"($n edges > cap $cap) on an unpredicted input — paying one " +
-          "extra pass for the distributed materialization")
-    }
-    // distributed protocol (r15 shape): persist → one fully-parallel
-    // count() that doubles as the columnar cache materialization — the
-    // contraction scans this cache three times (large-star, its
-    // re-read, the self-label pass), so MEMORY_AND_DISK hot-partition
+    // `.rdd` plans the pairs query once: adaptive execution runs its
+    // shuffle stages right here, so a second job over `pairRdd` (the
+    // cache build below, on overflow) re-runs only the final stage
+    val pairRdd = pairs.select(col("id_a"), col("id_b")).as[(Long, Long)].rdd
+    val perPart: Array[(Long, Array[(Long, Long)])] =
+      pairRdd.mapPartitions { it =>
+        val buf = new scala.collection.mutable.ArrayBuffer[(Long, Long)](1024)
+        var n = 0L
+        var keep = true
+        while (it.hasNext) {
+          val x = it.next(); n += 1
+          if (keep) {
+            if (n <= cap + 1) buf += x
+            else { buf.clear(); keep = false }
+          }
+        }
+        Iterator.single((n, if (keep) buf.toArray else null))
+      }.collect()
+    val edgeCount = perPart.map(_._1).sum
+    if (edgeCount <= cap && perPart.forall(_._2 != null))
+      return unionFind(Array.concat(perPart.map(_._2): _*))
+    Console.err.println(s"[dedupe] $edgeCount edges > cap $cap: " +
+      "star contraction over the cached edge list")
+    // MEMORY_AND_DISK: contraction scans this cache three times
+    // (large-star, its re-read, the self-label pass), so hot-partition
     // hits are worth far more than the evicted storage costs the sorts
-    // (DISK_ONLY measured 96.0 vs 42.2 s isolated at sf30, r15).
-    val raw = rawPlan
+    // (DISK_ONLY measured 96.0 vs 42.2 s isolated at sf30, r15)
+    val raw = pairRdd.toDF("id_a", "id_b")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val t0 = System.nanoTime()
-    val edgeCount = raw.count()
-    Console.err.println(f"[dedupe] edge materialization: $edgeCount edges " +
-      f"in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    if (edgeCount <= cap) {
-      // a conservative prediction (> cap) can land a small list here:
-      // collect from the just-built cache, exactly the r15 driver path
-      val collected = raw.as[(Long, Long)].collect()
-      raw.unpersist()
-      return unionFind(collected)
-    }
     // ALTERNATING LARGE-STAR / SMALL-STAR CONTRACTION (the
     // Kiveris et al. "Connected Components in MapReduce and Beyond"
     // shape, also what GraphFrames ships): each round rewires every
@@ -636,7 +564,7 @@ object Dedupe {
     // one extra full-volume shuffle for nothing.
     // Canonicalization (least/greatest) is two long ops computed on the
     // fly over the columnar cache — no second materialization; round
-    // 1's scans all hit the cache built by the guard's count().
+    // 1's first scan builds the cache and the rest hit it.
     val edges0 = raw.select(
       least(col("id_a"), col("id_b")).as("s"),
       greatest(col("id_a"), col("id_b")).as("l"))

@@ -51,6 +51,10 @@ object BoilerGen {
       .withColumn("n_chars", length(col("text")))
       .drop("__copy")
 
+    // counted from the source before the write: a count of `out` after
+    // the rename would recompute the crossJoin, and read the new file
+    // when outDir == srcDir
+    val nDocs = docs.count() * factor
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val tmp = s"$outDir/.tmp-documents"
     out.coalesce(1).write.mode("overwrite")
@@ -66,7 +70,7 @@ object BoilerGen {
     require(fs.rename(part, target), s"rename $part -> $target")
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
     System.err.println(s"[boilergen] wrote $target: " +
-      s"${out.count()} docs, $boilerTokens boiler tokens, factor $factor")
+      s"$nDocs docs, $boilerTokens boiler tokens, factor $factor")
     spark.stop()
     sys.exit(0)
   }

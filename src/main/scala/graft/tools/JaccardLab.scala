@@ -1,19 +1,20 @@
-package graft.operators
+package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.tokens
 import graft.functions.expressions.GraftFunctions
+import graft.operators.{Dedupe, Spread}
 
 /** Measurement harness for the r20 jaccard plan crossover: times the
   * co-occurrence COUNT plan and the df-ordered PREFIX plan on the same
   * corpus, prints the fan-out census (Σ df, Σ C(df,2), ratio) and both
   * plans' row counts + pair-set digests so equality is checked in the
   * same run. The committed crossover constant
-  * ([[Dedupe.boilerplateHeavy]]) is justified by this tool's numbers.
+  * ([[graft.operators.Dedupe.boilerplateHeavy]]) is justified by this tool's numbers.
   *
-  * Usage: runMain graft.operators.JaccardLab <dir> <passes>
+  * Usage: runMain graft.tools.JaccardLab <dir> <passes>
   * Env: SPARK_GRAFT_CPUS (default 32).
   */
 object JaccardLab {

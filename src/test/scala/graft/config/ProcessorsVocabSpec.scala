@@ -97,6 +97,20 @@ class ProcessorsVocabSpec extends SparkSpec {
     assert(caughtRows(1).getString(1) == null, "error cleared")
   }
 
+  test("try: a row an earlier child errors skips the later children") {
+    val in = envelope("""{"ok":1}""", "not json")
+    val out = apply(in,
+      """- try:
+        |    - awk: { codec: json, program: 'BEGIN { }' }
+        |    - mapping: 'root.seen = true'
+        |""".stripMargin)
+    val rows = out.orderBy(col("__seq")).select("value", "error").collect()
+    assert(rows(0).getString(0) == """{"seen":true}""")
+    assert(rows(0).isNullAt(1))
+    assert(rows(1).getString(0) == "not json", "errored row untouched")
+    assert(!rows(1).isNullAt(1), "error kept")
+  }
+
   test("group_by tags first matching predicate; group_by_value interpolates") {
     val in = envelope("""{"lvl":"err"}""", """{"lvl":"info"}""")
     val byPred = apply(in,
