@@ -5,8 +5,9 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.SparkSession
 
 /** Values a session derives once and reuses across its own queries:
-  * resolved parquet relations ([[Tables.load]]) and the near-dup miners'
-  * plan decisions ([[graft.operators.Dedupe]]). Entries belong to one
+  * resolved parquet relations ([[Tables.load]]), the near-dup miners'
+  * census readings and the FIFO of staging tables they persisted
+  * ([[graft.operators.Dedupe]]). Entries belong to one
   * session, so no session reads another's; the entries of a session
   * whose SparkContext has stopped are dropped on the next access, so
   * nothing outlives its session. `live` is a parameter only so the

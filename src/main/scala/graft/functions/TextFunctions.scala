@@ -109,18 +109,6 @@ object TextFunctions {
   def fingerprint(text: Column): Column =
     md5(lower(regexp_replace(trim(text), WhitespaceRe, " ")))
 
-  /** Case-SENSITIVE token fingerprint: md5 of the whitespace-normalized
-    * text without lowercasing, i.e. two docs share this key iff
-    * [[tokens]] produces the same token sequence for both. This is the
-    * collapse key for exact-dup staging in front of shingle-based
-    * similarity ([[graft.operators.Dedupe.ngramJaccardPairs]]): the
-    * shingle pipeline is case-sensitive, so collapsing on the
-    * lowercased [[fingerprint]] would merge docs whose true shingle
-    * Jaccard is below threshold.
-    */
-  def tokenFingerprint(text: Column): Column =
-    md5(regexp_replace(trim(text), WhitespaceRe, " "))
-
   /** MinHash signature of length k over the document's distinct word
     * n-gram shingles. Hash family = xxhash64 seeded by the slot index
     * (xxhash64 hashes (shingle, slot) jointly). Empty docs get MaxValue

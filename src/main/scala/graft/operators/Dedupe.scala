@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.storage.StorageLevel
 import graft.SessionMemo
 import graft.functions.TextFunctions._
 import graft.functions.expressions.GraftFunctions
@@ -10,9 +13,10 @@ import graft.functions.expressions.GraftFunctions
 /** Deduplication operators for document corpora, designed for the
   * 100 TB path: every variant is a pure DataFrame plan (scan → narrow
   * per-row hashing → one shuffle on the dedup key). No driver-side state
-  * outlives a session: the miners' plan decisions are memoized in the
-  * calling session's [[graft.SessionMemo]], and the only process-wide
-  * structure is the FIFO of staging tables released by [[releaseStaged]].
+  * outlives a session: the near-dup miners' census readings and the
+  * staging tables they persist both live in the calling session's
+  * [[graft.SessionMemo]], and [[releaseStaged]] unpersists a session's
+  * tables.
   *
   * Reference semantics: the `dedupe` processor drops messages whose key
   * was already seen (docs/modules/components/pages/processors/dedupe.adoc:26,
@@ -21,38 +25,51 @@ import graft.functions.expressions.GraftFunctions
   */
 object Dedupe {
 
-  // persisted membership tables from stagedByExactDup, evicted FIFO —
-  // the returned pair frame is lazy so the function can't unpersist
-  // its own cache; unpersisting an old frame is always safe (a
-  // re-evaluated plan just recomputes it)
-  private val stagedPersists =
-    scala.collection.mutable.Queue.empty[org.apache.spark.sql.DataFrame]
-  private def registerStagedPersist(df: org.apache.spark.sql.DataFrame): Unit =
-    stagedPersists.synchronized {
-      stagedPersists.enqueue(df)
-      // generous bound: each entry is a narrow (rep, id) or pair table
-      // (MBs, not GBs); evicting one that backs a NOT-YET-CONSUMED
-      // staged result would silently re-plan its expansion against
-      // estimated stats (the shuffle-join regression the persistence
-      // exists to prevent), so the cap only guards a pipeline that
-      // builds dozens of staged dedups without materializing any
-      while (stagedPersists.size > 64) {
-        stagedPersists.dequeue().unpersist(); ()
-      }
-    }
+  // The staging tables a session's miners persisted, oldest first: each
+  // census's shingle index, the exact-dup collapse's membership and
+  // rep-pair tables, and resolved cluster labels. The returned pair
+  // frames are lazy, so a miner can't unpersist its own caches;
+  // unpersisting an old frame is always safe (a re-evaluated plan just
+  // recomputes it).
+  private object StagedKey
+  private def staged(spark: SparkSession): mutable.Queue[DataFrame] =
+    SessionMemo.getOrElseUpdate(spark, StagedKey)(mutable.Queue.empty[DataFrame])
 
-  /** Release every staging table persisted by the dedup miners so far
-    * (ADVICE r14: entries were only released by FIFO pressure, so up
-    * to 64 consumed (rep, id)/pair frames could linger per session).
-    * Call AFTER the consuming action has materialized its result —
-    * releasing earlier re-plans the expansion joins against estimated
-    * stats, the exact regression the persistence exists to prevent.
-    * Unpersisting a consumed frame is always safe: a re-evaluated plan
-    * just recomputes it.
-    */
-  def releaseStaged(): Unit = stagedPersists.synchronized {
-    while (stagedPersists.nonEmpty) stagedPersists.dequeue().unpersist()
+  private def registerStagedPersist(df: DataFrame): Unit = {
+    val q = staged(df.sparkSession)
+    q.synchronized {
+      q.enqueue(df)
+      // generous bound: each entry is a shingle index, a narrow
+      // (rep, id) or pair table (MBs, not GBs); evicting one that backs
+      // a NOT-YET-CONSUMED staged result would silently re-plan its
+      // expansion against estimated stats (the shuffle-join regression
+      // the persistence exists to prevent), so the cap only guards a
+      // pipeline that builds dozens of staged dedups without
+      // materializing any
+      while (q.size > 64) { q.dequeue().unpersist(); () }
+    }
   }
+
+  /** Release every staging table the dedup miners persisted in `spark`
+    * so far (ADVICE r14: entries were only released by FIFO pressure,
+    * so up to 64 consumed frames could linger per session). Call AFTER
+    * the consuming action has materialized its result — releasing
+    * earlier re-plans the expansion joins against estimated stats, the
+    * exact regression the persistence exists to prevent. Unpersisting a
+    * consumed frame is always safe: a re-evaluated plan just recomputes
+    * it.
+    */
+  def releaseStaged(spark: SparkSession): Unit = {
+    val q = staged(spark)
+    q.synchronized { while (q.nonEmpty) { q.dequeue().unpersist(); () } }
+  }
+
+  /** `releaseStaged(spark)` for the calling thread's active session,
+    * else the default one.
+    */
+  def releaseStaged(): Unit =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .foreach(s => releaseStaged(s))
 
   /** Scale-adaptive kernel parallelism (r19, guide §2.5 "input skew:
     * one huge unsplittable file"): a single-row-group parquet input
@@ -92,13 +109,41 @@ object Dedupe {
     * not survivable under predicate pushdown). Downstream joins and
     * intersections move 8-byte longs, never n-gram text.
     */
+  private def shingleHashes(text: Column, shingleN: Int): Column =
+    call_function("graft_shingle_hashes", tokens(text), lit(shingleN))
+
+  /** (id, sh): each doc's [[shingleHashes]] set, unspread and uncached —
+    * the reference plans' input.
+    */
   private def shingleSets(docs: DataFrame, textCol: String,
                           idCol: String, shingleN: Int): DataFrame = {
     GraftFunctions.register(docs.sparkSession)
-    docs.select(col(idCol).as("id"),
-      call_function("graft_shingle_hashes",
-        tokens(col(textCol)), lit(shingleN)).as("sh"))
+    docs.select(col(idCol).as("id"), shingleHashes(col(textCol), shingleN).as("sh"))
   }
+
+  /** The miners' per-doc index over their [[spread]] input: (id,
+    * h = xxhash64 of the raw text, sh = the [[shingleHashes]] set). The
+    * census and every pair plan read it, so once a census has persisted
+    * it the corpus is shingled exactly once.
+    */
+  private[graft] def shingleIndex(docs: DataFrame, textCol: String,
+                                  idCol: String, shingleN: Int): DataFrame = {
+    GraftFunctions.register(docs.sparkSession)
+    spread(docs.select(col(idCol).as("id"), col(textCol).as("__txt")), "id")
+      .select(col("id"), xxhash64(col("__txt")).as("h"),
+        shingleHashes(col("__txt"), shingleN).as("sh"))
+  }
+
+  /** The inverted index of a set frame: one (id, sz, s) row per shingle
+    * of each non-empty set.
+    */
+  private[graft] def invertedIndex(sets: DataFrame): DataFrame =
+    // `sz` must be projected BEFORE the explode: computed alongside it,
+    // Catalyst moves size(sh) after the Generate and then carries (and
+    // unsafe-copies) the whole array on every exploded row.
+    sets.withColumn("sz", size(col("sh")))
+      .filter(col("sz") > 0)
+      .select(col("id"), col("sz"), explode(col("sh")).as("s"))
 
   /** Exact-Jaccard verification of candidate pairs against the full
     * shingle sets. Threshold is applied to the UNROUNDED ratio (matching
@@ -116,20 +161,156 @@ object Dedupe {
       .filter(col("jaccard_raw") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard_raw"), 4).as("jaccard"))
 
+  /** One census pass's readings over a corpus's shingle index, and the
+    * cost model that picks both near-dup miners' plan from them
+    * (*Continuously Adaptive Similarity Search*: choose the method from
+    * observed statistics). Every plan it can pick emits byte-identical
+    * rows, so a misjudged reading can only ever cost speed.
+    *
+    *   - `docs` rows, of which `texts` distinct (xxhash64 of the raw
+    *     text, no normalization: the byte-identical replication that
+    *     dominates real duplicate mass is caught at a fraction of the
+    *     md5+regexp cost, and the whitespace variants it misses are rare);
+    *   - `index` = Σ_s df(s), the inverted index's size, and `fanout` =
+    *     Σ_s C(df(s), 2), the count plan's exact join volume.
+    */
+  private[graft] final case class Census(docs: Long, texts: Long,
+                                         index: Double, fanout: Double) {
+
+    /** Collapse exact duplicates before mining ([[stagedByExactDup]])
+      * once a tenth of the rows repeat another's text. On a
+      * near-distinct corpus the collapse is pure overhead — three extra
+      * joins, measured 2.4 s (direct) vs 17 s (staged, driver harness,
+      * single-row-group sf0.1) on 5 000 docs with 8 dups.
+      */
+    def staged: Boolean = texts < 0.9 * docs
+
+    /** Count-plan join rows per index row for the sets the pair plan
+      * will mine: the corpus's own, or under [[staged]] its
+      * representatives'. The census reads the whole corpus, so the
+      * representatives' ratio is derived for uniform replication
+      * c = docs / texts: each df scales by c, so Σdf = c·Σdf_rep and
+      * ΣC(df,2) = c²·ΣC_rep + c(c−1)/2·Σdf_rep.
+      */
+    def fanoutRatio: Double = {
+      val ratio = fanout / math.max(1.0, index)
+      if (!staged) ratio
+      else {
+        val c = docs.toDouble / texts
+        (ratio - (c - 1.0) / 2.0) / c
+      }
+    }
+
+    /** Mine with [[prefixFilteredPairs]] rather than [[countPairs]].
+      * Crossover measured r20 (JaccardLab, warm isolated, 32 cores;
+      * ratio = fanout/index):
+      *   - sf0.1 clean, 5 000 docs: ratio 4.9 → count 0.47 s, prefix 1.34;
+      *   - 8 boiler tokens ubiquitous, 5 000 docs: ratio 255 →
+      *     count 1.50, prefix 1.98 (the break-even neighborhood);
+      *   - 8 boiler tokens, 20 000 docs (df 20 000, fan-out 1.26 B, true
+      *     output 34 k pairs): ratio 1037 → count 24.7 s, prefix 8.2 s.
+      * Count cost is LINEAR in fan-out (→ quadratic in corpus size under
+      * ubiquitous boilerplate); prefix cost tracks index + output size.
+      * Cap 256 ≈ the measured per-row break-even (~20 ns/fan-out row vs
+      * ~5 µs/index row); every clean/near-distinct corpus measured
+      * (sf0.001–sf100 reps) sits at ratio < 30. Known accepted loss: a
+      * corpus whose TRUE pair output is itself quadratic (30 ubiquitous
+      * boiler tokens pushed 1 500 short docs over the 0.35 threshold →
+      * 1.04 M true pairs) reads ratio 896 → prefix 6.4 s vs count 3.5 s —
+      * the per-output-pair verify is ~2× the count agg; bounded either
+      * way, and that regime is the LSH miner's territory anyway.
+      */
+    def prefix: Boolean = fanoutRatio > FanoutCap
+  }
+
+  private val FanoutCap = 256.0
+
+  /** The census action over a [[shingleIndex]]: ONE aggregation groups
+    * (doc, k) rows — one per doc keyed by its text hash and, with
+    * `moments`, one per index entry keyed by its shingle — so the doc
+    * groups count the rows and the distinct texts, and the shingle
+    * groups are the df profile. Map-side partial aggregation means only
+    * per-partition group counts cross the wire.
+    */
+  private[graft] def census(index: DataFrame, moments: Boolean = true): Census =
+    readings(
+      if (!moments) index.select(lit(true).as("doc"), col("h").as("k"))
+      // one scan of the index: position 0 is the doc's own row
+      else index.select(posexplode(concat(array(col("h")), col("sh"))))
+        .select((col("pos") === 0).as("doc"), col("col").as("k")))
+
+  private def readings(keys: DataFrame): Census = {
+    import keys.sparkSession.implicits._
+    val groups = keys.groupBy(col("doc"), col("k")).agg(count(lit(1)).as("c"))
+      .select(col("doc"), col("c")).as[(Boolean, Long)]
+    // the tasks that finish the groups fold them too: a global
+    // aggregate would cost one more exchange and one more job
+    groups.rdd.mapPartitions { it =>
+      var (docs, texts, index, fanout) = (0L, 0L, 0.0, 0.0)
+      it.foreach { case (doc, c) =>
+        if (doc) { docs += c; texts += 1 }
+        else { val df = c.toDouble; index += df; fanout += df * (df - 1) / 2 }
+      }
+      Iterator.single(Census(docs, texts, index, fanout))
+    }.fold(Census(0L, 0L, 0.0, 0.0)) { (a, b) =>
+      Census(a.docs + b.docs, a.texts + b.texts, a.index + b.index, a.fanout + b.fanout)
+    }
+  }
+
+  /** The census's fan-out test over an inverted index built by the
+    * caller (the unstaged reference plan, JaccardLab).
+    */
+  private[graft] def boilerplateHeavy(ex: DataFrame): Boolean =
+    readings(ex.select(lit(false).as("doc"), col("s").as("k"))).prefix
+
+  /** The miners' front end: `docs`' [[shingleIndex]] and its [[census]]
+    * (with the df `moments` for the Jaccard miner; the LSH miner only
+    * needs the doc half). The readings memoize per session (ANALYZE-once
+    * statistics reuse, *Incremental Based Framework for Efficient Top-K
+    * Similarity Search in Interactive Data Analysis Sessions*), keyed on
+    * the canonicalized analyzed plan — full plan equality, so two
+    * corpora never share readings — plus the text column and shingle
+    * size: they are a table property, and staleness can only pick the
+    * slower of byte-identical plans. On a miss the index is persisted
+    * (a staging table) before the census runs, so the census job
+    * shingles the corpus and the pair plan reads that cache; a hit
+    * persists nothing and the pair plan shingles inline, once.
+    */
+  private def censused(docs: DataFrame, textCol: String, idCol: String,
+                       shingleN: Int, moments: Boolean): (DataFrame, Census) = {
+    val index = shingleIndex(docs, textCol, idCol, shingleN)
+    val key = ("census", moments, docs.queryExecution.analyzed.canonicalized,
+      textCol, shingleN)
+    val readings = SessionMemo.getOrElseUpdate(docs.sparkSession, key) {
+      index.persist(StorageLevel.MEMORY_AND_DISK)
+      registerStagedPersist(index)
+      census(index, moments)
+    }
+    (index, readings)
+  }
+
   /** All near-duplicate pairs (idA < idB) with word-`shingleN`-gram
     * Jaccard >= threshold — EXACT result via an inverted-index self-join
     * on hashed shingles whose co-occurrence COUNT is the intersection
     * size, so Jaccard falls out of one aggregation with no per-pair
     * array verify and no array columns in any shuffle.
     *
+    * One [[census]] pass per corpus reads the row count, the distinct
+    * texts and the shingle-df moments, and its cost model picks both
+    * choices: direct or exact-dup-collapse staging ([[Census.staged]]),
+    * and the count or the prefix-filter pair plan ([[Census.prefix]]).
+    * Both plans read the census's cached [[shingleIndex]]; nothing
+    * tokenizes the corpus a second time. At 100 TB the census is one
+    * narrow scan whose map-side aggregation ships only group counts.
+    *
     * Scale notes: join fan-out is Σ_s C(df(s), 2) over shingle document
     * frequencies — benign while shingles are near-unique (word trigrams
-    * of real text are ~90% df=1), quadratic on any ubiquitous shingle.
-    * The length-ratio predicate prunes cross-size pairs inside the join.
-    * At corpus scale where boilerplate shingles appear (headers, license
-    * text), this op stays exact but the right default is
-    * [[minhashLshPairs]] — banded candidates track duplicate density,
-    * not df² — keeping this as the exact oracle for sampled validation.
+    * of real text are ~90% df=1), quadratic on any ubiquitous shingle,
+    * which is what the prefix plan is for. The length-ratio predicate
+    * prunes cross-size pairs inside the join. At corpus scale the right
+    * default is [[minhashLshPairs]] — banded candidates track duplicate
+    * density, not df² — keeping this as the exact oracle for sampled
+    * validation.
     *
     * PRECONDITION: `idCol` must be unique per row (ADVICE r19). The
     * co-occurrence-count plan keys pairs by (id_a, id_b); duplicate ids
@@ -139,132 +320,84 @@ object Dedupe {
     */
   def ngramJaccardPairs(docs: DataFrame, textCol: String, idCol: String,
                         shingleN: Int, threshold: Double): DataFrame = {
-    // ADAPTIVE staging: the exact-dup collapse below only pays when the
-    // corpus actually contains exact duplicates. On a near-distinct
-    // corpus it is pure overhead — three extra joins and a second
-    // shingle pass, measured 2.4 s (direct) vs 17 s (staged, driver
-    // harness, single-row-group sf0.1) on 5 000 docs with 8 dups. One
-    // narrow aggregate pass (map-side partial agg; only two longs cross
-    // the wire) estimates the duplicate mass; ±5% HLL error is
-    // irrelevant against the 0.9 cut. At 100 TB this pre-pass is one
-    // cheap scan that decides whether to spend the collapse shuffle.
-    // The estimator hashes RAW text (xxhash64, no normalization): it
-    // only gates a performance choice — both paths are byte-identical —
-    // and whitespace-variant duplicates it misses are rare, while the
-    // byte-identical replication that dominates real dup mass is caught
-    // at a fraction of the md5+regexp cost. The decision memoizes per
-    // session and canonicalized input plan (ANALYZE-once statistics
-    // reuse, [[graft.SessionMemo]]): it is a
-    // table property, re-deriving it on every invocation re-scans for a
-    // bit that cannot change the result, and staleness can only ever
-    // pick the slower of two byte-identical plans.
-    if (nearDistinctCorpus(docs, textCol))
-      ngramJaccardPairsDirect(
-        spread(docs.select(col(idCol).as("id"), col(textCol).as("__txt")),
-          "id"),
-        "__txt", "id", shingleN, threshold)
-    else
-      ngramJaccardPairsStaged(docs, textCol, idCol, shingleN, threshold)
+    val (index, c) = censused(docs, textCol, idCol, shingleN, moments = true)
+    val mine = (sets: DataFrame) => jaccardPairs(sets, c.prefix, threshold)
+    if (c.staged) stagedByExactDup(index, mine) else mine(index)
+  }
+
+  /** The exact pair plan over a set frame (id, sh): see
+    * [[ngramJaccardPairsDirect]] for the two shapes.
+    */
+  private def jaccardPairs(sets: DataFrame, prefix: Boolean,
+                           threshold: Double): DataFrame = {
+    val ex = invertedIndex(sets)
+    if (prefix) prefixFilteredPairs(sets, ex, threshold)
+    else countPairs(ex, threshold)
   }
 
   /** Exact-duplicate COLLAPSE before the near-dup join — the standard
     * production staging (web corpora are 30-50% byte-identical): the
-    * quadratic-ish pair join runs only on DISTINCT texts (one rep =
-    * min id per text fingerprint), then pairs expand back through
-    * group membership. Identical docs have Jaccard exactly 1 ≥ t, so
-    * within-group pairs need no computation (only a nonempty-shingle
-    * check: two <shingleN-token docs have empty sets and are excluded,
-    * same as the direct join's |A|+|B| > 0 guard). A pathological key
-    * (one text duplicated ~everywhere) concentrates its group's
-    * expansion in one task; expansion output = true duplicate volume,
-    * which any downstream consumer pays anyway.
+    * quadratic-ish pair join runs only on DISTINCT shingle sets (one
+    * rep = min id per set), then pairs expand back through group
+    * membership. Docs with equal sets have identical Jaccard to every
+    * other doc and J = 1 among themselves, so within-group pairs need
+    * no computation (only a nonempty-set check: two <shingleN-token
+    * docs have empty sets and are excluded, same as the direct join's
+    * |A|+|B| > 0 guard). A pathological key (one text duplicated
+    * ~everywhere) concentrates its group's expansion in one task;
+    * expansion output = true duplicate volume, which any downstream
+    * consumer pays anyway.
     *
-    * The collapse key is [[tokenFingerprint]] (case-SENSITIVE,
-    * token-consistent), NOT the lowercased [[fingerprint]]: the shingle
-    * pipeline is case-sensitive, so a lowercasing key would merge docs
-    * whose true shingle Jaccard is below threshold (and make the
-    * `first(__txt)` representative non-deterministic). With this key,
-    * every member of a group tokenizes to the same sequence, so the
-    * representative's shingle set — and every emitted pair — is
-    * deterministic and byte-identical to the direct plan's.
+    * The collapse key `__fp` is the sorted set itself read from the
+    * index — exact, case-sensitive like the shingles, and free of a
+    * second tokenization; every emitted pair is byte-identical to the
+    * direct plan's. Generalized over the rep-level pair miner: the
+    * exact inverted-index path and the minhash-LSH path (equal sets
+    * have equal minhash signatures) both stage through it.
     */
-  private def ngramJaccardPairsStaged(
-      docs: DataFrame, textCol: String, idCol: String,
-      shingleN: Int, threshold: Double): DataFrame =
-    stagedByExactDup(docs, textCol, idCol, shingleN,
-      reps => ngramJaccardPairsDirect(reps, "__txt", "id",
-        shingleN, threshold))
-
-  /** Shared duplicate-mass estimator (see [[ngramJaccardPairs]] for the
-    * full rationale): one narrow xxhash64 approx-distinct pass, decision
-    * memoized per session and canonicalized input plan. Both near-dup
-    * miners use it to choose direct vs exact-dup-collapse staging.
-    */
-  private def nearDistinctCorpus(docs: DataFrame, textCol: String): Boolean = {
-    val statsKey = (docs.queryExecution.analyzed.semanticHash(), textCol)
-    SessionMemo.getOrElseUpdate(docs.sparkSession, statsKey) {
-      val dupStats = docs
-        .agg(count(lit(1)).as("n"),
-          approx_count_distinct(xxhash64(col(textCol))).as("d"))
-        .head()
-      dupStats.getLong(1).toDouble >= 0.9 * dupStats.getLong(0).toDouble
-    }
-  }
-
-  /** The exact-dup collapse staging, generalized over the rep-level
-    * pair miner: collapse to one representative per token-identical
-    * text, mine pairs among REPS only, expand cross-group pairs through
-    * membership, and emit within-group pairs as J = 1 directly. Used by
-    * both the exact inverted-index path and the minhash-LSH path —
-    * identical token sequences have identical shingle sets AND
-    * identical minhash signatures, so staged output is byte-identical
-    * to the direct plan for either miner.
-    */
-  private def stagedByExactDup(
-      docs: DataFrame, textCol: String, idCol: String, shingleN: Int,
-      minePairs: DataFrame => DataFrame): DataFrame = {
-    val keyed = spread(
-        docs.select(col(idCol).as("id"), col(textCol).as("__txt")), "id")
-      .withColumn("__fp", tokenFingerprint(col("__txt")))
-    val reps = keyed.groupBy(col("__fp"))
-      .agg(min(col("id")).as("id"), first(col("__txt")).as("__txt"))
+  private def stagedByExactDup(index: DataFrame,
+                               minePairs: DataFrame => DataFrame): DataFrame = {
     // membership is consumed three times (two expansion joins + the
-    // within-group self-join); persisted it is a tiny (rep, id) table —
-    // ~16 B/row — while recomputing it re-fingerprints the whole corpus
-    // per use (exchange reuse does not span all the union branches)
-    val members = keyed.select(col("__fp"), col("id"))
-      .join(reps.select(col("__fp"), col("id").as("rep")), "__fp")
-      .select(col("rep"), col("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // within-group self-join); persisted it is a (rep, id) table plus
+    // the reps' sets, while recomputing it re-sorts and re-shuffles
+    // every set per use (exchange reuse does not span all the union
+    // branches)
+    val members = index.select(col("id"), col("sh"), array_sort(col("sh")).as("__fp"))
+      .select(min(col("id")).over(Window.partitionBy(col("__fp"))).as("rep"),
+        col("id"), col("sh"))
+      .select(col("rep"), col("id"),
+        when(col("id") === col("rep"), col("sh")).as("sh"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     registerStagedPersist(members)
+    val reps = members.filter(col("id") === col("rep")).select(col("id"), col("sh"))
     // rep-level pairs are duplicate-pair-sized (tiny next to the
     // expanded output); materializing them hands the planner their TRUE
     // size so the expansion joins go broadcast — estimated stats of an
     // array-bearing verify subtree (the minhash miner) otherwise deny
     // it and force two shuffle joins of the full expansion volume
-    val repPairs = minePairs(reps)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val repPairs = minePairs(reps).persist(StorageLevel.MEMORY_AND_DISK)
     registerStagedPersist(repPairs)
     repPairs.count()
+    val byRep = members.select(col("rep"), col("id"))
     // cross-group: every member combo of the two rep groups, re-ordered
     val cross = repPairs
-      .join(members.select(col("rep").as("id_a"), col("id").as("ma")), "id_a")
-      .join(members.select(col("rep").as("id_b"), col("id").as("mb")), "id_b")
+      .join(byRep.select(col("rep").as("id_a"), col("id").as("ma")), "id_a")
+      .join(byRep.select(col("rep").as("id_b"), col("id").as("mb")), "id_b")
       .select(least(col("ma"), col("mb")).as("id_a"),
         greatest(col("ma"), col("mb")).as("id_b"), col("jaccard"))
-    // within-group: all id pairs of a nonempty-shingle group, J = 1
-    val nonEmpty = shingleSets(reps, "__txt", "id", shingleN)
-      .filter(size(col("sh")) > 0).select(col("id").as("rep"))
-    val within = members.join(nonEmpty, "rep")
-      .as("a").join(members.as("b"),
+    // within-group: all id pairs of a nonempty-set group, J = 1
+    val nonEmpty = reps.filter(size(col("sh")) > 0).select(col("id").as("rep"))
+    val within = byRep.join(nonEmpty, "rep")
+      .as("a").join(byRep.as("b"),
         col("a.rep") === col("b.rep") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         lit(1.0).as("jaccard"))
     cross.unionByName(within)
   }
 
-  /** The direct (no exact-dup collapse) pair join — see
-    * [[ngramJaccardPairs]] for the staged entry point.
+  /** The direct (no exact-dup collapse) pair join over an unspread,
+    * uncached shingle pass, with its own fan-out test — the reference
+    * the staged and cached plans of [[ngramJaccardPairs]] must match.
     *
     * Plan (r19 optimization, guide §2.3 "aggregate before you shuffle"):
     * a pure inverted-index co-occurrence COUNT. Because shingle sets are
@@ -289,29 +422,21 @@ object Dedupe {
     * inside the join, before aggregation.
     *
     * r20 (VERDICT r19 #1): the fan-out guard is back IN the plan,
-    * behind a measured crossover. On a boilerplate-heavy corpus
-    * (shared headers / license text in otherwise-distinct docs) the
-    * count plan's join volume Σ C(df,2) goes quadratic in corpus size
-    * — measured 2.4 s (clean sf0.1) → 12.8 s with 30 ubiquitous
-    * shingles, linear in the fan-out and unbounded in N. A memoized
-    * one-pass df census picks the plan: below the crossover, the pure
-    * count plan above; at/above it, [[prefixFilteredPairs]] — prefix
-    * filtering under a GLOBAL (df asc, hash) order, so ubiquitous
-    * shingles never enter the candidate index. Both plans are exact
-    * and emit byte-identical rows.
+    * behind a measured crossover ([[Census.prefix]]). On a
+    * boilerplate-heavy corpus (shared headers / license text in
+    * otherwise-distinct docs) the count plan's join volume Σ C(df,2)
+    * goes quadratic in corpus size — measured 2.4 s (clean sf0.1) →
+    * 12.8 s with 30 ubiquitous shingles, linear in the fan-out and
+    * unbounded in N. At/above the crossover, [[prefixFilteredPairs]] —
+    * prefix filtering under a GLOBAL (df asc, hash) order, so
+    * ubiquitous shingles never enter the candidate index. Both plans
+    * are exact and emit byte-identical rows.
     */
   private[operators] def ngramJaccardPairsDirect(
       docs: DataFrame, textCol: String, idCol: String,
       shingleN: Int, threshold: Double): DataFrame = {
     val sets = shingleSets(docs, textCol, idCol, shingleN)
-    // `sz` must be projected BEFORE the explode: computed alongside it,
-    // Catalyst moves size(sh) after the Generate and then carries (and
-    // unsafe-copies) the whole array on every exploded row.
-    val ex = sets.withColumn("sz", size(col("sh")))
-      .filter(col("sz") > 0)
-      .select(col("id"), col("sz"), explode(col("sh")).as("s"))
-    if (boilerplateHeavy(ex)) prefixFilteredPairs(sets, ex, threshold)
-    else countPairs(ex, threshold)
+    jaccardPairs(sets, boilerplateHeavy(invertedIndex(sets)), threshold)
   }
 
   /** The pure co-occurrence-count plan (the r19 shape) — the fast path
@@ -336,46 +461,6 @@ object Dedupe {
     pairs.filter(col("jaccard_raw") >= threshold)
       .select(col("id_a"), col("id_b"),
         round(col("jaccard_raw"), 4).as("jaccard"))
-  }
-
-  /** Fan-out census for the direct miner's plan choice: one narrow
-    * map-side-aggregated pass over the inverted index computes the
-    * EXACT count-plan join volume Σ_s C(df(s), 2) and the index size
-    * Σ_s df(s). The decision memoizes per session and index plan
-    * (same table-property justification as [[nearDistinctCorpus]]):
-    * both candidate plans are byte-identical in output, so staleness
-    * can only ever pick the slower one. Crossover measured r20
-    * (JaccardLab, warm isolated, 32 cores; ratio = fanout/index):
-    *   - sf0.1 clean, 5 000 docs: ratio 4.9 → count 0.47 s, prefix 1.34;
-    *   - 8 boiler tokens ubiquitous, 5 000 docs: ratio 255 →
-    *     count 1.50, prefix 1.98 (the break-even neighborhood);
-    *   - 8 boiler tokens, 20 000 docs (df 20 000, fan-out 1.26 B, true
-    *     output 34 k pairs): ratio 1037 → count 24.7 s, prefix 8.2 s.
-    * Count cost is LINEAR in fan-out (→ quadratic in corpus size under
-    * ubiquitous boilerplate); prefix cost tracks index + output size.
-    * Cap 256 ≈ the measured per-row break-even (~20 ns/fan-out row vs
-    * ~5 µs/index row); every clean/near-distinct corpus measured
-    * (sf0.001–sf100 reps) sits at ratio < 30. Known accepted loss: a
-    * corpus whose TRUE pair output is itself quadratic (30 ubiquitous
-    * boiler tokens pushed 1 500 short docs over the 0.35 threshold →
-    * 1.04 M true pairs) reads ratio 896 → prefix 6.4 s vs count 3.5 s —
-    * the per-output-pair verify is ~2× the count agg; bounded either
-    * way, and that regime is the LSH miner's territory anyway.
-    */
-  private val fanoutCap = 256.0
-  private[graft] def boilerplateHeavy(ex: DataFrame): Boolean = {
-    val key = (ex.queryExecution.analyzed.semanticHash(), "__fanout")
-    SessionMemo.getOrElseUpdate(ex.sparkSession, key) {
-      val row = ex.groupBy(col("s"))
-        .agg(count(lit(1)).cast("double").as("df"))
-        .agg(sum(col("df")).as("n"),
-          sum(col("df") * (col("df") - lit(1.0)) / 2.0).as("fanout"))
-        .head()
-      // an empty index (empty corpus, or every doc shorter than the
-      // shingle size) has no shingles: both sums are null, no fan-out
-      !row.isNullAt(1) &&
-        row.getDouble(1) > fanoutCap * math.max(1.0, row.getDouble(0))
-    }
   }
 
   /** PPJoin-style prefix-filtered pairs under a GLOBAL (df asc, hash
@@ -422,31 +507,31 @@ object Dedupe {
     */
   def minhashLshPairs(docs: DataFrame, textCol: String, idCol: String,
                       shingleN: Int, bands: Int, rowsPerBand: Int,
-                      threshold: Double): DataFrame =
-    // same adaptive staging as the exact path: identical token
-    // sequences have identical minhash signatures, so collapse + expand
-    // is byte-identical to direct mining while the banded join sees
-    // only distinct texts (sf10 measured 130 s direct on 100x
-    // replication; the staged plan re-mines 5 000 reps)
-    if (nearDistinctCorpus(docs, textCol))
-      minhashLshPairsDirect(
-        spread(docs.select(col(idCol).as("id"), col(textCol).as("__txt")),
-          "id"),
-        "__txt", "id", shingleN, bands, rowsPerBand, threshold)
-    else
-      stagedByExactDup(docs, textCol, idCol, shingleN,
-        reps => minhashLshPairsDirect(reps, "__txt", "id",
-          shingleN, bands, rowsPerBand, threshold))
+                      threshold: Double): DataFrame = {
+    // the census's doc half picks the same adaptive staging as the
+    // exact path: equal shingle sets have equal minhash signatures, so
+    // collapse + expand is byte-identical to direct mining while the
+    // banded join sees only distinct sets (sf10 measured 130 s direct
+    // on 100x replication; the staged plan re-mines 5 000 reps)
+    val (index, c) = censused(docs, textCol, idCol, shingleN, moments = false)
+    val mine = (sets: DataFrame) => lshPairs(sets, bands, rowsPerBand, threshold)
+    if (c.staged) stagedByExactDup(index, mine) else mine(index)
+  }
 
+  /** The LSH miner over an unspread, uncached shingle pass — the
+    * reference for [[minhashLshPairs]]' cached and staged plans.
+    */
   private[operators] def minhashLshPairsDirect(
       docs: DataFrame, textCol: String, idCol: String,
       shingleN: Int, bands: Int, rowsPerBand: Int,
-      threshold: Double): DataFrame = {
-    val k = bands * rowsPerBand
-    GraftFunctions.register(docs.sparkSession)
-    val sets = shingleSets(docs, textCol, idCol, shingleN)
+      threshold: Double): DataFrame =
+    lshPairs(shingleSets(docs, textCol, idCol, shingleN), bands,
+      rowsPerBand, threshold)
+
+  private def lshPairs(sets: DataFrame, bands: Int, rowsPerBand: Int,
+                       threshold: Double): DataFrame = {
     val withSig = sets.withColumn("sig",
-      call_function("graft_minhash_h", col("sh"), lit(k)))
+      call_function("graft_minhash_h", col("sh"), lit(bands * rowsPerBand)))
     val banded = withSig.select(col("id"),
       explode(lshBandKeys(col("sig"), bands, rowsPerBand)).as("band"))
     val cand = banded.as("a").join(banded.as("b"),

@@ -3,16 +3,14 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions.tokens
-import graft.functions.expressions.GraftFunctions
-import graft.operators.{Dedupe, Spread}
+import graft.operators.Dedupe
 
 /** Measurement harness for the r20 jaccard plan crossover: times the
   * co-occurrence COUNT plan and the df-ordered PREFIX plan on the same
   * corpus, prints the fan-out census (Σ df, Σ C(df,2), ratio) and both
   * plans' row counts + pair-set digests so equality is checked in the
   * same run. The committed crossover constant
-  * ([[graft.operators.Dedupe.boilerplateHeavy]]) is justified by this tool's numbers.
+  * ([[graft.operators.Dedupe.Census.prefix]]) is justified by this tool's numbers.
   *
   * Usage: runMain graft.tools.JaccardLab <dir> <passes>
   * Env: SPARK_GRAFT_CPUS (default 32).
@@ -31,26 +29,13 @@ object JaccardLab {
         "16KB")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark)
-    val docs = Spread.spread(
-      spark.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id").as("id"), col("text").as("__txt")), col("id"))
-    val sets = docs.select(col("id"),
-      call_function("graft_shingle_hashes",
-        tokens(col("__txt")), lit(3)).as("sh"))
-    val ex = sets.withColumn("sz", size(col("sh")))
-      .filter(col("sz") > 0)
-      .select(col("id"), col("sz"), explode(col("sh")).as("s"))
-
-    val census = ex.groupBy(col("s"))
-      .agg(count(lit(1)).cast("double").as("df"))
-      .agg(sum(col("df")).as("n"),
-        sum(col("df") * (col("df") - lit(1.0)) / 2.0).as("fanout"))
-      .head()
-    val n = census.getDouble(0)
-    val fanout = census.getDouble(1)
-    println(f"[jaccardlab] $dir index=${n}%.0f fanout=${fanout}%.0f " +
-      f"ratio=${fanout / n}%.1f heavy=${Dedupe.boilerplateHeavy(ex)}")
+    val sets = Dedupe.shingleIndex(
+      spark.read.parquet(s"$dir/documents.parquet"), "text", "doc_id", 3)
+    val ex = Dedupe.invertedIndex(sets)
+    val census = Dedupe.census(sets)
+    println(f"[jaccardlab] $dir index=${census.index}%.0f " +
+      f"fanout=${census.fanout}%.0f ratio=${census.fanoutRatio}%.1f " +
+      s"heavy=${census.prefix}")
 
     def digest(dfr: org.apache.spark.sql.DataFrame): (Long, Long) = {
       val r = dfr.agg(count(lit(1)),
