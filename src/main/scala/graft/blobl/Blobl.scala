@@ -134,13 +134,11 @@ object Blobl {
     * their normalized JSON text, but a STRING document becomes its raw
     * bytes (unquoted) — the reference's content() view of a string root
     * (config/test/bloblang/walk_json.yaml expects `foo & bar`, not
-    * `"foo & bar"`).
+    * `"foo & bar"`). One expression, so the root document's merge chain
+    * appears once in the plan.
     */
-  private def docText(rootJson: Column): Column = {
-    val norm = call_function("graft_json_normalize", rootJson)
-    when(norm.startsWith("\""), try_parse_json(norm).cast("string"))
-      .otherwise(norm)
-  }
+  private def docText(rootJson: Column): Column =
+    call_function("graft_json_content", rootJson)
 
   /** `mapping` in TYPED mode: `this.<field>` binds to typed columns and
     * every `root.<name> = …` assignment becomes an output column named

@@ -611,6 +611,14 @@ object Compiler {
       case MapDecl(n, ss) => n -> ss
     })
     var meta = env0.metaCol
+    // the condition of top-level statements: their updates replace the
+    // value outright rather than as `when(true, new).otherwise(old)`,
+    // which would put a second copy of the old value in the plan per
+    // statement (analysis works on the unshared tree, so N statements
+    // would cost 2^N copies of the first root)
+    val always = lit(true)
+    def onlyIf(c: Column, updated: Column, old: Column): Column =
+      if (c eq always) updated else when(c, updated).otherwise(old)
 
     def apply(ss: Seq[Stmt], cond: Column): Unit = {
       // statements see the root built SO FAR (RHS `root` reads) and the
@@ -653,10 +661,10 @@ object Compiler {
             // e.g. root = (expr with deleted() in a match arm) — null
             // means the deleting branch fired
             deleted = deleted || (cond && v0.col.isNull)
-            root = when(cond && v0.col.isNotNull, serializeRoot(v0)).otherwise(root)
+            root = onlyIf(cond && v0.col.isNotNull, serializeRoot(v0), root)
             assigned = assigned || (cond && v0.col.isNotNull)
           case v0 =>
-            root = when(cond, serializeRoot(v0)).otherwise(root)
+            root = onlyIf(cond, serializeRoot(v0), root)
             assigned = assigned || cond
         }
 
@@ -677,9 +685,8 @@ object Compiler {
           case _ => coalesce(toJsonText(v0), lit("null"))
         }
         val assignCond = if (v0.omitNull) cond && v0.col.isNotNull else cond
-        root = when(assignCond,
-          call_function("graft_json_set", root, pathJson, leaf))
-          .otherwise(root)
+        root = onlyIf(assignCond,
+          call_function("graft_json_set", root, pathJson, leaf), root)
         assigned = assigned || assignCond
 
       case RootAssign(segs, value) =>
@@ -690,8 +697,8 @@ object Compiler {
         val v0 = compile(value, envNow)
         val patch = nestedPatch(segs, v0)
         val assignCond = if (v0.omitNull) cond && v0.col.isNotNull else cond
-        root = when(assignCond,
-          call_function("graft_json_merge", root, patch)).otherwise(root)
+        root = onlyIf(assignCond,
+          call_function("graft_json_merge", root, patch), root)
         assigned = assigned || assignCond
 
       case MetaAssign(key, value) =>
@@ -700,9 +707,9 @@ object Compiler {
         // config/examples/joining_streams.yaml reassigns output_topic)
         val m = meta.getOrElse(map().cast("map<string,string>"))
         val v0 = asString(compile(value, envNow))
-        meta = Some(when(cond, map_concat(
+        meta = Some(onlyIf(cond, map_concat(
           map_filter(m, (k, _) => k =!= lit(key)),
-          map(lit(key), v0))).otherwise(m))
+          map(lit(key), v0)), m))
 
       case MetaWholeAssign(value) =>
         // `meta = expr` replaces the whole map (the expr must produce
@@ -713,7 +720,7 @@ object Compiler {
           org.apache.spark.sql.types.MapType(
             org.apache.spark.sql.types.StringType,
             org.apache.spark.sql.types.StringType))
-        meta = Some(when(cond, coalesce(newMap, m)).otherwise(m))
+        meta = Some(onlyIf(cond, coalesce(newMap, m), m))
 
       case IfStmt(c, thn, els) =>
         val cc = asBool(compile(c, envNow))
@@ -722,7 +729,7 @@ object Compiler {
       }
     }
 
-    apply(stmts, lit(true))
+    apply(stmts, always)
     DocResult(root, deleted, meta, assigned)
   }
 

@@ -929,6 +929,7 @@ object Pipeline {
                 env: Map[String, String] = Map.empty): org.apache.spark.sql.streaming.StreamingQuery = {
     val spec = load(configYaml)
     registerCaches(spark, spec.cacheResources)
+    graft.streaming.LocalCheckpointFileManager.install(spark)
     val src = one(spec.input) match {
       case ("generate", b) =>
         Sources.generateStream(spark, b.path("rate").asInt(10),

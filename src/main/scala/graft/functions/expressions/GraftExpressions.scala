@@ -403,7 +403,9 @@ case class JsonSetPath(doc: Expression, path: Expression,
     copy(doc = f, path = s, value = t)
 }
 
-/** One-arg JSON kernel (collapse / squash — methods.adoc object ops). */
+/** One-arg JSON kernel (collapse / squash — methods.adoc object ops;
+  * content — a mapped document's message content).
+  */
 case class JsonUnaryOp(child: Expression, op: String) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
     GraftFunctions.requireTypes(prettyName, Seq(child.dataType), Seq(StringType))
@@ -416,6 +418,7 @@ case class JsonUnaryOp(child: Expression, op: String) extends UnaryExpression {
       case "collapse" => JsonKernel.collapse(s)
       case "squash" => JsonKernel.squash(s)
       case "inferSchema" => JsonKernel.inferSchema(s)
+      case "content" => JsonKernel.content(s)
     }
   }
 
@@ -534,6 +537,7 @@ object GraftFunctions {
       CosineLshKeys(es(0), intArg(es(1), "planes"), intArg(es(2), "tables"))),
     "graft_json_merge" -> ((es: Seq[Expression]) => JsonMerge(es(0), es(1))),
     "graft_json_normalize" -> ((es: Seq[Expression]) => JsonNormalize(es(0))),
+    "graft_json_content" -> ((es: Seq[Expression]) => JsonUnaryOp(es(0), "content")),
     "graft_json_without" -> ((es: Seq[Expression]) => JsonWithout(es(0), es(1))),
     "graft_json_collapse" -> ((es: Seq[Expression]) => JsonUnaryOp(es(0), "collapse")),
     "graft_json_squash" -> ((es: Seq[Expression]) => JsonUnaryOp(es(0), "squash")),

@@ -75,6 +75,17 @@ object JsonKernel {
     UTF8String.fromString(write(stripDeleted(n)))
   }
 
+  /** Message content of a document: [[normalize]]d JSON text, except
+    * that a STRING root becomes its raw, unquoted text (the reference's
+    * content() view: config/test/bloblang/walk_json.yaml expects
+    * `foo & bar`, not `"foo & bar"`).
+    */
+  def content(json: UTF8String): UTF8String = {
+    val n = mapper.readTree(json.toString)
+    if (n.isTextual) UTF8String.fromString(n.asText())
+    else UTF8String.fromString(write(stripDeleted(n)))
+  }
+
   /** Drop the named top-level (dot-separated = nested) paths. */
   def without(json: UTF8String, keys: UTF8String): UTF8String = {
     val n = mapper.readTree(json.toString)

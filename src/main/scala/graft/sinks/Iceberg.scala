@@ -1642,11 +1642,13 @@ object Iceberg {
   def upsertStream(df: DataFrame, location: String, keyCols: Seq[String],
                    checkpoint: String, partitionCols: Seq[String] = Nil,
                    deleteCol: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    graft.streaming.LocalCheckpointFileManager.install(df.sparkSession)
     df.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (b: DataFrame, _: Long) =>
         upsert(b, location, keyCols, partitionCols, deleteCol)
       }
       .start()
+  }
 }

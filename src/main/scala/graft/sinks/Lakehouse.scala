@@ -239,11 +239,13 @@ object Lakehouse {
   def upsertStream(df: DataFrame, table: String, keyCols: Seq[String],
                    checkpoint: String,
                    partitionCols: Seq[String] = Seq.empty,
-                   deleteCol: Option[String] = None): StreamingQuery =
+                   deleteCol: Option[String] = None): StreamingQuery = {
+    graft.streaming.LocalCheckpointFileManager.install(df.sparkSession)
     df.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (b: DataFrame, _: Long) =>
         upsert(b, table, keyCols, partitionCols, deleteCol)
       }
       .start()
+  }
 }

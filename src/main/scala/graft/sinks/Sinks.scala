@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sources.Envelope
+import graft.streaming.LocalCheckpointFileManager
 
 /** Sink registry + output combinators (SURVEY.md §2.13).
   *
@@ -57,7 +58,8 @@ object Sinks {
     * sinks don't recompute the plan N times.
     */
   def foreachBatchFanOut(df: DataFrame, checkpoint: String,
-                         sinks: Seq[DataFrame => Unit]): StreamingQuery =
+                         sinks: Seq[DataFrame => Unit]): StreamingQuery = {
+    LocalCheckpointFileManager.install(df.sparkSession)
     df.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -66,6 +68,7 @@ object Sinks {
         finally { batch.unpersist(); () }
       }
       .start()
+  }
 
   /** Lakehouse-style table sink (reference warehouse/lakehouse outputs,
     * e.g. docs/…/outputs/snowflake_put.adoc:26 family): partitioned +
@@ -88,10 +91,12 @@ object Sinks {
   }
 
   // ── streaming writers ─────────────────────────────────────────────────
-  def parquetStream(df: DataFrame, path: String, checkpoint: String): StreamingQuery =
+  def parquetStream(df: DataFrame, path: String, checkpoint: String): StreamingQuery = {
+    LocalCheckpointFileManager.install(df.sparkSession)
     df.writeStream.format("parquet")
       .option("path", path).option("checkpointLocation", checkpoint)
       .outputMode("append").start()
+  }
 
   /** Partitioned, ordered broker write through the
     * [[graft.sources.Broker.Transport]] seam (outputs/kafka.adoc /
@@ -186,13 +191,15 @@ object Sinks {
     * needs the spark-sql-kafka connector jar at runtime.
     */
   def kafkaStream(df: DataFrame, bootstrapServers: String, topic: String,
-                  checkpoint: String): StreamingQuery =
+                  checkpoint: String): StreamingQuery = {
+    LocalCheckpointFileManager.install(df.sparkSession)
     df.select(col(Envelope.ValueCol).cast("binary").as("value"))
       .writeStream.format("kafka")
       .option("kafka.bootstrap.servers", bootstrapServers)
       .option("topic", topic)
       .option("checkpointLocation", checkpoint)
       .start()
+  }
 
   // ── combinators (work for batch via the write functions) ──────────────
 
