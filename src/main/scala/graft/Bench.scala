@@ -1,8 +1,7 @@
 package graft
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-import graft.functions.expressions.GraftFunctions
+import graft.operators.Observe
 
 /** Benchmark main — one JSON line with per-query wall seconds.
   *
@@ -11,77 +10,46 @@ import graft.functions.expressions.GraftFunctions
   * count, Catalyst prunes unreferenced projections and EliminateSorts
   * drops orderings, so map-heavy queries would time little more than the
   * parquet scan.
+  *
+  * Each query's wall is split by layer from one [[Observe.Execution]]
+  * listener over the timed region: `build_s` is the wall of `fn` (frame
+  * and fixture construction, eager fixture jobs included); within the
+  * noop write, `analysis_ms` / `optimization_ms` / `planning_ms` are the
+  * Catalyst phases and `exec_s` the busy wall of its jobs; `residue_s`
+  * (wall − build − phases − exec) is codegen, scheduling and commit.
+  * `jobs`, `stages`, `tasks`, `shuffle_bytes` (read + write) and
+  * `spill_bytes` count the whole region.
   */
 object Bench {
+  /** The close protocol's cpu count: only a run at this width writes the
+    * canonical `BENCH_FULL.json`; any other writes `BENCH_FULL_c<cpus>`.
+    */
+  val CloseCpus = 32
+
+  /** One attempt of one query: its wall and the listener's split. */
+  private final case class Attempt(sec: Double, buildSec: Double,
+                                   all: Observe.Execution.Reading,
+                                   action: Observe.Execution.Reading) {
+    def json: String = {
+      def f(v: Double) = f"$v%.3f"
+      val phases = Observe.Execution.Phases.map(p =>
+        s""""${p}_ms":${action.phaseMs(p)}""").mkString(",")
+      val exec = action.busyMs / 1e3
+      val residue = sec - buildSec - action.phasesMs / 1e3 - exec
+      s"""{"sec":${f(sec)},"build_s":${f(buildSec)},$phases,""" +
+        s""""exec_s":${f(exec)},"residue_s":${f(residue)},""" +
+        s""""jobs":${all.jobs},"stages":${all.stages},"tasks":${all.tasks},""" +
+        s""""shuffle_bytes":${all.shuffleBytes},"spill_bytes":${all.spillBytes}}"""
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     // query name → first failure message across passes (see failedJson)
     val failedQueries =
       new java.util.concurrent.ConcurrentHashMap[String, String]()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER=local-cluster[N,cores,memMB] runs REAL separate
-    // executor JVMs on one box (in-process Master/Worker, forked
-    // executors) — the harness for "does executor count absorb what one
-    // big JVM's task-memory pool cannot" experiments. Requires
-    // SPARK_HOME (the worker shells out to the distribution's launcher)
-    // and the executors need our compiled classes + the same JDK17
-    // --add-opens the driver gets from build.sbt.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-    if (master.startsWith("local-cluster")) {
-      // the in-process Worker resolves the distribution through the
-      // spark.test.home sysprop (falling back to a cwd that has no
-      // jars/ — "Cannot find any build directories")
-      sys.props("spark.test.home") =
-        sys.env.getOrElse("SPARK_HOME", "/opt/spark")
-      val opens = Seq(
-        "java.base/java.lang", "java.base/java.lang.invoke",
-        "java.base/java.lang.reflect", "java.base/java.io",
-        "java.base/java.net", "java.base/java.nio",
-        "java.base/java.util", "java.base/java.util.concurrent",
-        "java.base/java.util.concurrent.atomic",
-        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-        "java.base/sun.security.action", "java.base/sun.util.calendar")
-        .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
-      builder0
-        .config("spark.executor.extraClassPath",
-          System.getProperty("java.class.path"))
-        .config("spark.executor.extraJavaOptions",
-          s"$opens -Dfile.encoding=UTF-8 -Dsun.jnu.encoding=UTF-8")
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "12g"))
-    }
-    val spark = builder0
-      // shuffle-partition count is a ladder knob like split bytes: at
-      // the top rungs (sf10) a 600 M-row shuffle at 32 partitions
-      // exceeds memory-resident size per partition — a real cluster
-      // scales this with executor count, so the ladder protocol may too
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE's default 1MB minPartitionSize coalesces the post-shuffle
-      // side of every sort to 1-2 partitions at this test scale, which
-      // serializes the per-row codec/hash kernels projected above the
-      // sort (32× slowdown). Size-based coalescing can't see per-row
-      // CPU cost; at real scale partitions are far above 1MB and this
-      // setting is a no-op.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "16KB"))
-      // scan-split sizing is a per-SF knob: at 100 TB with 128 MB files
-      // the default is right, and at sf0.1 fragmenting the iceberg /
-      // lakehouse intermediate files into tiny tasks costs more in
-      // scheduling than it buys (measured +22% on the full bench). The
-      // sf1 protocol (SCALE_NOTES.md) sets 2 MB + 256 KB open cost so
-      // the 2 MB-row-group ScaleGen tables scan in parallel.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "128MB"))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "4194304"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark)
+    val cpus = LocalSession.envCpus
+    val spark = LocalSession(cpus)
     // fixed name order: per-query numbers are comparable across rounds
     // (hash-map order would shuffle which query absorbs JVM/codegen
     // warmup), and a cheap scan-only warmup pass soaks up session
@@ -135,7 +103,7 @@ object Bench {
     // all-cores variant + /proc/loadavg alongside
     val kernelParStart = graft.tools.RefKernel.mbPerSecParallel()
     val loadStart = graft.tools.RefKernel.loadAvg()
-    val passTimes = (1 to runs).map { pass =>
+    val passes = (1 to runs).map { pass =>
       selected.map { case (name, fn) =>
         // each attempt is an independent measurement: drop cached plans
         // and let the ContextCleaner reap the previous query's
@@ -147,25 +115,36 @@ object Bench {
           .foreach(_.unpersist(blocking = false))
         graft.operators.Dedupe.releaseStaged() // drain the staging FIFO too
         System.gc()
-        val t0 = System.nanoTime()
-        var ok = true
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          ok = false
-          failedQueries.putIfAbsent(name,
-            Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        val e = new Observe.Execution()
+        val (sec, buildSec) = e.around(spark) {
+          val t0 = System.nanoTime()
+          var t1 = -1L
+          var ok = true
+          try {
+            val df = fn(spark, sfDir)
+            t1 = System.nanoTime()
+            e.markAction()
+            df.write.format("noop").mode("overwrite").save()
+          } catch { case err: Throwable =>
+            ok = false
+            failedQueries.putIfAbsent(name,
+              Option(err.getMessage).getOrElse(err.getClass.getName).take(200))
+            System.err.println(s"[bench] $name failed: ${err.getMessage}")
+          }
+          val t2 = System.nanoTime()
+          val sec = (t2 - t0) / 1e9
+          System.err.println(f"[bench] pass $pass $name ${sec}%.3f" +
+            (if (ok) "" else " FAILED"))
+          (sec, ((if (t1 < 0) t2 else t1) - t0) / 1e9)
         }
-        val sec = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench] pass $pass $name ${sec}%.3f" +
-          (if (ok) "" else " FAILED"))
-        name -> sec
+        name -> Attempt(sec, buildSec, e.reading, e.actionReading)
       }
     }
-    val byPass = passTimes.map(_.toMap)
-    val results = selected.map { case (name, _) =>
-      name -> byPass.map(_(name)).min
+    val byPass = passes.map(_.toMap)
+    val attempts = selected.map { case (name, _) =>
+      name -> byPass.map(_(name)).minBy(_.sec)
     }
+    val results = attempts.map { case (name, a) => name -> a.sec }
     val kernelEnd = graft.tools.RefKernel.mbPerSec()
     val kernelParEnd = graft.tools.RefKernel.mbPerSecParallel()
     val loadEnd = graft.tools.RefKernel.loadAvg()
@@ -243,7 +222,7 @@ object Bench {
         s""""loadavg":{"start":"$loadStart","end":"$loadEnd"},""" +
         s""""total_kernel_normalized":${fmt(totalNorm)}"""
     // full per-query detail first (humans / logs) …
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+    val qs = attempts.map { case (k, a) => "\"" + k + "\":" + a.json }
       .mkString("{", ",", "}")
     // env rides on the FULL artifact only — the tail headline line must
     // stay inside the driver's bounded stdout window
@@ -254,23 +233,13 @@ object Bench {
     // stdout-tail parse is capped under ~1900 chars, which truncates the
     // full map to a dozen entries — the file is the complete record
     // a SPARK_GRAFT_ONLY-filtered run must not clobber the full-sweep
-    // artifact with a partial query map; nor must a DIFFERENT-cpu-count
-    // run clobber the committed close artifact (VERDICT r19 #3: the
-    // driver's 8-cpu scaling pass overwrote the 32-cpu BENCH_FULL) —
-    // when the existing artifact carries another cpus value, divert to
-    // a cpu-suffixed name instead
+    // artifact with a partial query map, nor a run at another width the
+    // close artifact (an 8-cpu scaling pass once overwrote the 32-cpu
+    // BENCH_FULL)
     val outFile = sys.env.get("SPARK_GRAFT_BENCH_OUT")
-      .orElse(if (only.nonEmpty) None else {
-        val default = java.nio.file.Paths.get("BENCH_FULL.json")
-        val otherCpus =
-          try {
-            val txt = new String(java.nio.file.Files.readAllBytes(default),
-              "UTF-8")
-            """"cpus":(\d+)""".r.findFirstMatchIn(txt)
-              .exists(_.group(1) != cpus)
-          } catch { case _: Exception => false }
-        Some(if (otherCpus) s"BENCH_FULL_c$cpus.json" else "BENCH_FULL.json")
-      })
+      .orElse(if (only.nonEmpty) None
+        else Some(if (cpus == CloseCpus) "BENCH_FULL.json"
+          else s"BENCH_FULL_c$cpus.json"))
     outFile.foreach { f =>
       try java.nio.file.Files.write(java.nio.file.Paths.get(f),
         (fullJson + "\n").getBytes("UTF-8"))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-factor promotion: replicate a driver-generated sf directory
@@ -18,19 +18,11 @@ object ScaleGen {
     val Array(srcDir, outDir, factorS) = args
     val factor = factorS.toInt
     require(factor >= 1, "factor >= 1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // read with the engine's session settings — otherwise timestamps
-    // load as TIMESTAMP_NTZ and the Spark footer metadata stamps NTZ
-    // into the output, which every downstream timestamp kernel rejects
-    Tables.configure(spark)
+    val spark = LocalSession()
+    // the engine's session settings read the timestamps back as
+    // TimestampType (not NTZ, whose Spark footer metadata every
+    // downstream timestamp kernel rejects); write them as MICROS
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
 
     def read(t: String): DataFrame = spark.read.parquet(s"$srcDir/$t.parquet")
     def strideOf(df: DataFrame, key: String): Long =

@@ -361,7 +361,6 @@ object SparkEntry {
     "t_chunk_markdown" -> ((s, d) => {
       // markdown-strategy chunking — rows-only (algorithmic); boundary
       // invariants gated in ArchiveChunkSpec
-      graft.functions.expressions.GraftFunctions.register(s)
       Tables.documents(s, d).filter(col("doc_id") < 30)
         .select(col("doc_id"),
           posexplode(call_function("graft_chunk_markdown",
@@ -374,7 +373,6 @@ object SparkEntry {
     "t_chunk_recursive" -> ((s, d) => {
       // recursive_character chunking — no SQL oracle (algorithmic);
       // unit-tested for boundary/overlap invariants in ChunkerSpec
-      graft.functions.expressions.GraftFunctions.register(s)
       Tables.documents(s, d).filter(col("doc_id") < 30)
         .select(col("doc_id"),
           posexplode(T.chunksRecursive(col("text"), 120, 20)))
@@ -3792,7 +3790,6 @@ object SparkEntry {
           F.objectNode().set[com.fasterxml.jackson.databind.JsonNode]("country",
             F.objectNode().put("iso_code", name)): com.fasterxml.jackson.databind.JsonNode)
       })
-      graft.functions.expressions.GraftFunctions.register(s)
       // the mmdb trie walk + JSON round-trip is a per-row CPU kernel:
       // spread the single parquet split across cores before it (same
       // rationale as p_javascript; at real scale file splits already
@@ -3871,7 +3868,6 @@ object SparkEntry {
       // parquet file as a VALUE (reference parquet_decode/encode
       // processors): fold each region's nations into one in-memory
       // parquet blob, then decode it back to rows
-      graft.functions.expressions.GraftFunctions.register(s)
       val schema =
         "message nation { required int64 id; required binary name (UTF8); }"
       val docs = Tables.nation(s, d)

@@ -33,9 +33,11 @@ object Tables {
     * ONCE via its metastore or table-format manifests, not per query).
     * Only the PLAN (LogicalRelation: file index + schema) is kept; no
     * data is persisted and every action still scans the parquet from
-    * disk. FloorLab (r20) measured ~40–60 ms of the ~90 ms per-query
-    * driver build inside `spark.read.parquet` re-resolution; across 197
-    * queries × 3 passes that is pure floor. The test data is immutable
+    * disk. Re-resolving `spark.read.parquet` per query was ~40–60 ms of
+    * the ~90 ms per-query driver build (r20; `graft.Bench` now reports
+    * it per query as `build_s`, next to the Catalyst phase, `exec_s` and
+    * `residue_s` fields); across 197 queries × 3 passes that is pure
+    * floor. The test data is immutable
     * (TESTDATA.md), and tools that regenerate derived dirs
     * (ScaleGen/BoilerGen) use fresh sessions, so staleness cannot arise
     * within a session.

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Throughput-mode benchmark producing numbers in the SAME UNITS as the
@@ -21,17 +21,10 @@ import org.apache.spark.sql.functions._
   */
 object ThroughputBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = LocalSession.envCpus
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val msgs = sys.env.getOrElse("SPARK_GRAFT_TPUT_MSGS", "2000000").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.configure(spark)
+    val spark = LocalSession(cpus)
 
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
 
@@ -73,7 +66,7 @@ object ThroughputBench {
       // stable 1.27 M at 16). A real deployment's brokers are other
       // machines — there the cap is wrong, which is why it lives here
       // and not in Migrator.
-      val nParts = math.min(cpus.toInt,
+      val nParts = math.min(cpus,
         math.max(1, Runtime.getRuntime.availableProcessors() / 2))
       val src = new KafkaWire.Server(maxFetchRecords = 10000)
       val dst = new KafkaWire.Server(maxFetchRecords = 10000)

@@ -775,8 +775,6 @@ object Methods {
   private def expr_substr(s: Column, from: Column): Column =
     s.substr(from.cast("int"), length(s))
 
-  private def try_cast_arr(c: Column): Column = c.cast("array<variant>")
-
   private def asBinary(v0: BV): Column = v0.t match {
     case Bin => v0.col
     case _ => asString(v0).cast("binary")
@@ -792,15 +790,6 @@ object Methods {
   def elemT(arr: BV): BT = arr.t match {
     case A(e) => e
     case _ => V
-  }
-
-  private def elemTypeName(arr: BV): String = elemT(arr) match {
-    case S => "string"
-    case I => "long"
-    case F => "double"
-    case B => "boolean"
-    case TS => "timestamp"
-    case _ => "variant"
   }
 
 }

@@ -684,36 +684,54 @@ object Pipeline {
     done.toSeq.map(n => n -> run(spark, byName(n), env)).toMap
   }
 
-  /** Build the full DataFrame (input + processors), unexecuted.
-    * Config-level `${VAR}` / `${VAR:default}` substitutes over the raw
-    * text first, as the reference parses configs — defaults apply even
-    * with an empty env (config/examples/jira_input.yaml).
+  /** The config prelude every entry point shares: config-level `${VAR}`
+    * / `${VAR:default}` substitutes ONCE over the raw text, as the
+    * reference parses configs (defaults apply even with an empty env —
+    * config/examples/jira_input.yaml), then the config parses, its cache
+    * resources register, and the input's own `processors:` come off the
+    * input to run on every batch it reads.
     */
-  def build(spark: SparkSession, configYaml0: String,
-            env: Map[String, String] = Map.empty): DataFrame = {
-    val configYaml = substEnv(configYaml0, env)
-    val spec = load(configYaml)
-    registerCaches(spark, spec.cacheResources)
-    val src = compileInput(spark, spec.input, env)
-    val buffered = spec.buffer.map(applyBuffer(src, _, env)).getOrElse(src)
-    spec.processors.foldLeft(buffered)((df, p) =>
-      Processors.compile(p, env)(df))
+  private final case class Prepared(spec: Spec, input: JsonNode,
+                                    inputProcessors: Seq[DataFrame => DataFrame]) {
+    def read(src: DataFrame): DataFrame =
+      inputProcessors.foldLeft(src)((d, p) => p(d))
   }
 
+  private def prepare(spark: SparkSession, configYaml: String,
+                      env: Map[String, String]): Prepared = {
+    val spec = load(substEnv(configYaml, env))
+    registerCaches(spark, spec.cacheResources)
+    val (input, procs) = splitInputProcessors(spec.input, env)
+    Prepared(spec, input, procs)
+  }
+
+  /** The full DataFrame of a prepared config (input + processors). */
+  private def frame(spark: SparkSession, p: Prepared,
+                    env: Map[String, String]): DataFrame = {
+    val src = p.read(compileInputInner(spark, p.input, env))
+    val buffered = p.spec.buffer.map(applyBuffer(src, _, env)).getOrElse(src)
+    p.spec.processors.foldLeft(buffered)((df, proc) =>
+      Processors.compile(proc, env)(df))
+  }
+
+  /** Build the full DataFrame (input + processors), unexecuted. */
+  def build(spark: SparkSession, configYaml: String,
+            env: Map[String, String] = Map.empty): DataFrame =
+    frame(spark, prepare(spark, configYaml, env), env)
+
   /** Build and execute through the output; returns the final frame. */
-  def run(spark: SparkSession, configYaml0: String,
+  def run(spark: SparkSession, configYaml: String,
           env: Map[String, String] = Map.empty): DataFrame = {
     val readings = new MetricReadings
     runReadings.withValue(Some(readings))(
-      runCollecting(spark, configYaml0, env, readings))
+      runCollecting(spark, prepare(spark, configYaml, env), env, readings))
   }
 
-  private def runCollecting(spark: SparkSession, configYaml0: String,
+  private def runCollecting(spark: SparkSession, prepared: Prepared,
                             env: Map[String, String],
                             readings: MetricReadings): DataFrame = {
-    val configYaml = substEnv(configYaml0, env)
-    val spec = load(configYaml)
-    val df0 = build(spark, configYaml, env)
+    val spec = prepared.spec
+    val df0 = frame(spark, prepared, env)
     // metrics: observe the delivered row count on the SAME action the
     // output runs (no second job) and flush to the configured exporter
     // — the reference's `metrics:` target block (§2.14)
@@ -927,10 +945,10 @@ object Pipeline {
     */
   def runStream(spark: SparkSession, configYaml: String,
                 env: Map[String, String] = Map.empty): org.apache.spark.sql.streaming.StreamingQuery = {
-    val spec = load(configYaml)
-    registerCaches(spark, spec.cacheResources)
+    val prepared = prepare(spark, configYaml, env)
+    val spec = prepared.spec
     graft.streaming.LocalCheckpointFileManager.install(spark)
-    val src = one(spec.input) match {
+    val src = one(prepared.input) match {
       case ("generate", b) =>
         Sources.generateStream(spark, b.path("rate").asInt(10),
           b.get("mapping").asText, env)
@@ -1055,7 +1073,8 @@ object Pipeline {
       case (other, _) =>
         throw new IllegalArgumentException(s"streaming input '$other' not supported")
     }
-    val df = spec.processors.foldLeft(src)((d, p) => Processors.compile(p, env)(d))
+    val df = spec.processors.foldLeft(prepared.read(src))((d, p) =>
+      Processors.compile(p, env)(d))
     val out = spec.output.getOrElse(
       throw new IllegalArgumentException("streaming config needs an output"))
     one(out) match {
@@ -1089,21 +1108,24 @@ object Pipeline {
 
   private def compileInput(spark: SparkSession, n0: JsonNode,
                            env: Map[String, String]): DataFrame = {
-    // input-level `processors:` run on every batch as it is read
-    // (components/inputs/about.adoc — site_analytics.yaml counts and
-    // deletes at the input)
-    val (n, post) = Option(n0.get("processors")) match {
+    val (n, post) = splitInputProcessors(n0, env)
+    post.foldLeft(compileInputInner(spark, n, env))((d, p) => p(d))
+  }
+
+  /** An input without its `processors:`, and those processors compiled:
+    * they run on every batch as it is read (components/inputs/about.adoc
+    * — site_analytics.yaml counts and deletes at the input).
+    */
+  private def splitInputProcessors(n0: JsonNode, env: Map[String, String])
+      : (JsonNode, Seq[DataFrame => DataFrame]) =
+    Option(n0.get("processors")) match {
       case Some(procs) if n0.isObject =>
         val stripped = n0.asInstanceOf[
           com.fasterxml.jackson.databind.node.ObjectNode].deepCopy()
         stripped.remove("processors")
-        (stripped: JsonNode,
-          procs.elements().asScala.toSeq.map(Processors.compile(_, env)))
+        (stripped, procs.elements().asScala.toSeq.map(Processors.compile(_, env)))
       case _ => (n0, Nil)
     }
-    val base = compileInputInner(spark, n, env)
-    post.foldLeft(base)((d, p) => p(d))
-  }
 
   private def compileInputInner(spark: SparkSession, n: JsonNode,
                                 env: Map[String, String]): DataFrame =

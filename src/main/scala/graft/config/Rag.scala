@@ -110,8 +110,8 @@ object Rag {
     val env = Map("REDPANDA_BROKERS" -> broker)
     val yamlM = new ObjectMapper(
       new com.fasterxml.jackson.dataformat.yaml.YAMLFactory())
-    val cfg = yamlM.readTree(Pipeline.substEnv(
-      resource("ingestion/redpanda-docs.yaml"), env))
+    // the raw config: run substitutes ${VAR} once, after the edit
+    val cfg = yamlM.readTree(resource("ingestion/redpanda-docs.yaml"))
       .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     cfg.at("/input/git")
       .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
@@ -175,8 +175,7 @@ object Rag {
 
     stage("seed (docs select + broker write)")
     // 1. indexing — the reference config, env-substituted like the CLI
-    Pipeline.run(spark,
-      Pipeline.substEnv(resource("indexing/openai_pgvector.yaml"), env), env)
+    Pipeline.run(spark, resource("indexing/openai_pgvector.yaml"), env)
     stage("indexing pipeline")
 
     // 2. the store after indexing

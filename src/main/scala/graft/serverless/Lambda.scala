@@ -175,14 +175,7 @@ object Lambda {
   def main(args: Array[String]): Unit = {
     val api = sys.env.getOrElse("AWS_LAMBDA_RUNTIME_API",
       throw new IllegalStateException("AWS_LAMBDA_RUNTIME_API not set"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.expressions.GraftFunctions.register(spark)
+    val spark = graft.LocalSession()
     val handler = new Handler(spark, resolveConfig())
     runLoop(api, handler)
     spark.stop()

@@ -106,8 +106,6 @@ object PgVector {
                                   key: Seq[Any]): Seq[Int] =
       indexFor(colIdxs).get(key).map(_.toSeq).getOrElse(Nil)
 
-    private[PgVector] def rowAt(slot: Int): Array[Any] = store(slot)
-
     private[PgVector] def updateAt(slot: Int, col: Int, v: Any): Unit = {
       val r = store(slot)
       // re-index only tuples involving the column

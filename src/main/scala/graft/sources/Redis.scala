@@ -115,10 +115,6 @@ object Redis {
       case b: Array[Byte] => new String(b, "UTF-8")
       case x => x.toString
     }
-    private def num(a: Any): Long = a match {
-      case n: Number => n.longValue()
-      case s => str(s).toLong
-    }
 
     def command(cmd: String, args: Seq[Any]): Any = synchronized {
       val a = args.map(str)

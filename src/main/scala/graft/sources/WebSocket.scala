@@ -369,7 +369,6 @@ object WebSocket {
     */
   final class CollectServer extends AutoCloseable {
     private val received = ArrayBuffer.empty[String]
-    private val seq = new java.util.concurrent.atomic.AtomicLong(0)
     private val inner = new Server((conn, _, _) => {
       var open = true
       while (open) conn.receive() match {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Adversarial high-df corpus for the near-dup miners (VERDICT r19 #1):
@@ -26,14 +25,7 @@ object BoilerGen {
     val outDir = args(1)
     val boilerTokens = args(2).toInt
     val factor = if (args.length > 3) args(3).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
 
     val boiler = (0 until boilerTokens)
       .map(i => f"boilerplate$i%03d").mkString(" ")

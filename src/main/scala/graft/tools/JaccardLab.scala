@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedupe
@@ -13,22 +12,13 @@ import graft.operators.Dedupe
   * ([[graft.operators.Dedupe.Census.prefix]]) is justified by this tool's numbers.
   *
   * Usage: runMain graft.tools.JaccardLab <dir> <passes>
-  * Env: SPARK_GRAFT_CPUS (default 32).
+  * Env: SPARK_GRAFT_CPUS (default: every processor of the host).
   */
 object JaccardLab {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val passes = if (args.length > 1) args(1).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        "16KB")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     val sets = Dedupe.shingleIndex(
       spark.read.parquet(s"$dir/documents.parquet"), "text", "doc_id", 3)
     val ex = Dedupe.invertedIndex(sets)

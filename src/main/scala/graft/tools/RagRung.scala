@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale rung for the RAG INDEXING pipeline (VERDICT r18 task #2b):
@@ -19,16 +18,7 @@ object RagRung {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sf1")
     val repl = args.lift(1).map(_.toInt).getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "96g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Tables.configure(spark)
+    val spark = graft.LocalSession()
 
     val kernel0 = RefKernel.mbPerSec()
     graft.config.Rag.registerTemplates()
@@ -60,8 +50,8 @@ object RagRung {
       "OPENAI_API_KEY" -> "test-key",
       "POSTGRES_DSN" -> dsn, "POSTGRES_TABLE" -> "rag")
     val t0 = System.nanoTime()
-    graft.config.Pipeline.run(spark, graft.config.Pipeline.substEnv(
-      graft.config.Rag.resource("indexing/openai_pgvector.yaml"), env), env)
+    graft.config.Pipeline.run(spark,
+      graft.config.Rag.resource("indexing/openai_pgvector.yaml"), env)
     val indexSec = (System.nanoTime() - t0) / 1e9
 
     // digest: chunk count + per-key coverage spot checks from the store

@@ -13,3 +13,11 @@ object GraftColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
+
+/** The listener bus delivers events asynchronously, so counters read
+  * right after an action would miss its last tasks. `waitUntilEmpty` is
+  * package-private to Spark, hence this bridge.
+  */
+object GraftListenerBus {
+  def drain(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}

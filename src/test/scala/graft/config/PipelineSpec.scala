@@ -212,4 +212,76 @@ class PipelineSpec extends SparkSpec {
     // the metrics mapping dropped the internal counters
     assert(!text.contains("input_received"), text)
   }
+
+  /** A fresh in-process broker with one two-partition topic holding
+    * `{"id": i}` for every id.
+    */
+  private def memTopic(topic: String, ids: Range): String = {
+    import graft.sources.Broker
+    val broker = "pipe_" + java.util.UUID.randomUUID.toString.replace("-", "")
+    Broker.InMemory.named(broker).createTopic(topic, 2)
+    val transport = Broker.transportFor(s"mem://$broker")
+    ids.foreach { i =>
+      transport.append(topic, i % 2,
+        Seq(Broker.Record(s"k$i".getBytes, s"""{"id":$i}""".getBytes)))
+    }
+    s"mem://$broker"
+  }
+
+  private def streamIds(config: String, table: String,
+                        env: Map[String, String] = Map.empty): Seq[Long] = {
+    val q = Pipeline.runStream(spark, config, env)
+    try q.processAllAvailable() finally q.stop()
+    spark.table(table).select(get_json_object(col("value"), "$.id").cast("long"))
+      .collect().map(_.getLong(0)).toSeq.sorted
+  }
+
+  test("a stream config's ${VAR} substitutes as a batch config's does") {
+    val addr = memTopic("orders", 0 until 6)
+    val table = "stream_env_" + java.util.UUID.randomUUID.toString.take(8)
+    val config =
+      s"""input:
+         |  kafka:
+         |    addresses: [ "$addr" ]
+         |    topics: [ $${TOPIC} ]
+         |pipeline:
+         |  processors:
+         |    - mapping: 'root.id = this.id + $${STEP:100}'
+         |output:
+         |  memory: { name: $table }
+         |""".stripMargin
+    assert(streamIds(config, table, Map("TOPIC" -> "orders")) == (100L until 106L))
+  }
+
+  test("a stream input's own processors run on every batch it reads") {
+    val addr = memTopic("t", 0 until 5)
+    val table = "stream_inproc_" + java.util.UUID.randomUUID.toString.take(8)
+    val config =
+      s"""input:
+         |  kafka:
+         |    addresses: [ "$addr" ]
+         |    topics: [ t ]
+         |  processors:
+         |    - mapping: 'root.id = this.id * 10'
+         |pipeline:
+         |  processors:
+         |    - mapping: 'root.id = this.id + 1'
+         |output:
+         |  memory: { name: $table }
+         |""".stripMargin
+    assert(streamIds(config, table) == Seq(1L, 11L, 21L, 31L, 41L))
+  }
+
+  test("run substitutes ${VAR} once, as build does") {
+    // an env value that itself reads like a reference stays literal
+    val config =
+      """input:
+        |  generate: { count: 1, mapping: 'root.v = "${A}"' }
+        |""".stripMargin
+    val env = Map("A" -> "${B}", "B" -> "twice")
+    def v(df: org.apache.spark.sql.DataFrame): String =
+      df.select(get_json_object(col("value"), "$.v")).head().getString(0)
+    assert(v(Pipeline.build(spark, config, env)) == "${B}")
+    assert(v(Pipeline.run(spark, config, env)) == "${B}")
+  }
 }
