@@ -15,7 +15,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
-import graft.config.{Pipeline, Processors}
+import graft.config.{Outputs, Pipeline, Processors}
 
 /** MCP server over a repository of pipeline resources — the analog of
   * the reference's `mcp-server` CLI entry point (contract:
@@ -197,14 +197,12 @@ final class McpServer(spark: SparkSession, repositoryDir: String,
 
   /** In-process cache store. memory/lru/ttlru/ristretto/noop seed from
     * `init`; `file` persists one file per key under `directory` — the
-    * same backends [[Pipeline.registerCaches]] treats as in-process.
+    * same backends [[graft.config.Caches.register]] treats as in-process.
     */
   private def addCache(res: JsonNode): Unit = {
     if (!passesFilters(res)) return
     val label = labelOf(res)
-    val comp = componentNode(res)
-    val kind = comp.properties().asScala.head.getKey
-    val body = comp.get(kind)
+    val (kind, body) = graft.config.Component.kindOf(componentNode(res))
     val fileDir: Option[Path] = kind match {
       case "memory" | "lru" | "ttlru" | "ristretto" | "noop" =>
         val store = cacheStores.getOrElseUpdate(label, TrieMap.empty)
@@ -335,7 +333,7 @@ final class McpServer(spark: SparkSession, repositoryDir: String,
         else (mapper.writeValueAsString(m),
           declared.filter(m.has).map(k => k -> m.get(k).asText).toMap)
       }
-      Pipeline.writeOutput(envelopeDf(rows), node)
+      Outputs.write(envelopeDf(rows), node, env)
       Seq(s"Wrote ${rows.size} messages")
     })
   }

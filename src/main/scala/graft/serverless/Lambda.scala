@@ -7,7 +7,7 @@ import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
-import graft.config.{Pipeline, Processors}
+import graft.config.{Caches, Outputs, Pipeline, Processors}
 import graft.operators.Http
 
 /** The serverless entry point (reference:
@@ -62,9 +62,9 @@ object Lambda {
     private val output = Option(root.get("output"))
       .getOrElse(yaml.readTree(defaultOutputYaml))
     locally {
-      Pipeline.registerCaches(spark,
+      Caches.register(spark,
         Option(root.get("cache_resources"))
-          .map(_.elements().asScala.toSeq).getOrElse(Seq.empty))
+          .map(_.elements().asScala.toSeq).getOrElse(Seq.empty), env)
     }
 
     /** Handle one invocation: the event JSON becomes a one-message
@@ -81,7 +81,7 @@ object Lambda {
         val processed = procs.foldLeft(one: DataFrame)((df, p) =>
           Processors.compile(p, env)(df))
         val (_, batches) = Pipeline.SyncResponse.collect {
-          Pipeline.writeOutput(processed, output)
+          Outputs.write(processed, output, env)
         }
         val result: com.fasterxml.jackson.databind.JsonNode = {
           def batchNode(b: Seq[String]) = {

@@ -390,7 +390,7 @@ object DeclarativeTest {
   def run(spark: SparkSession, tc: TestCase): Seq[String] = {
     import spark.implicits._
     if (tc.cacheResources.nonEmpty)
-      graft.config.Pipeline.registerCaches(spark, tc.cacheResources)
+      graft.config.Caches.register(spark, tc.cacheResources, Map.empty)
     val in = tc.input.zipWithIndex
       .map { case (m, i) => (i.toLong, m.batch.toLong, m.content, m.metadata) }
       .toDF("__seq", "__batch", "value", "metadata")

@@ -78,7 +78,7 @@ class ExamplesConformanceSpec extends SparkSpec {
     assert(ids1 == Seq(1L, 2L, 3L))
     // the output's trailing cache write persisted the cursor in the
     // sql level (the multilevel's cold half)
-    val cur1 = Pipeline.cacheLevelsOf("pgstate").get.head.get("table_cursor")
+    val cur1 = Caches.cacheLevelsOf("pgstate").get.head.get("table_cursor")
     assert(cur1.exists(_.contains("\"id\":3")), s"cursor after poll 1: $cur1")
     seed(2) // rows 4 and 5 arrive between polls
     val run2 = Pipeline.run(spark, cfg)
@@ -86,7 +86,7 @@ class ExamplesConformanceSpec extends SparkSpec {
       mapper.readTree(r.getString(r.fieldIndex("value"))).get("id").asLong)
       .toSeq.sorted
     assert(ids2 == Seq(4L, 5L), s"poll 2 must see only the new rows: $ids2")
-    val cur2 = Pipeline.cacheLevelsOf("pgstate").get.head.get("table_cursor")
+    val cur2 = Caches.cacheLevelsOf("pgstate").get.head.get("table_cursor")
     assert(cur2.exists(_.contains("\"id\":5")), s"cursor after poll 2: $cur2")
   }
 

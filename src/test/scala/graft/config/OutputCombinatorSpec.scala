@@ -6,7 +6,7 @@ import graft.SparkSpec
 
 /** YAML forms of the output combinators (outputs/broker.adoc,
   * switch.adoc, fallback.adoc, reject.adoc, drop.adoc,
-  * sync_response.adoc, cache.adoc) — the writeOutput dispatch over the
+  * sync_response.adoc, cache.adoc) — the output table's entries over the
   * Sinks combinator functions.
   */
 class OutputCombinatorSpec extends SparkSpec {

@@ -284,4 +284,40 @@ class PipelineSpec extends SparkSpec {
     assert(v(Pipeline.build(spark, config, env)) == "${B}")
     assert(v(Pipeline.run(spark, config, env)) == "${B}")
   }
+
+  test("an output's own processors read the run's env, as the pipeline's do") {
+    val table = "out_env_" + java.util.UUID.randomUUID.toString.take(8)
+    Pipeline.run(spark,
+      s"""input:
+         |  generate: { count: 2, mapping: 'root.id = this.seq' }
+         |pipeline:
+         |  processors:
+         |    - mapping: 'root.pipeline = env("STAGE")'
+         |output:
+         |  memory: { name: $table }
+         |  processors:
+         |    - mutation: 'root.output = env("STAGE")'
+         |""".stripMargin, Map("STAGE" -> "blue"))
+    val stages = spark.table(table).select(
+        get_json_object(col("value"), "$.pipeline"),
+        get_json_object(col("value"), "$.output"))
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(stages == Set(("blue", "blue")))
+  }
+
+  test("a stream output's own processors run on every batch it writes") {
+    val addr = memTopic("o", 0 until 3)
+    val table = "stream_outproc_" + java.util.UUID.randomUUID.toString.take(8)
+    val config =
+      s"""input:
+         |  kafka:
+         |    addresses: [ "$addr" ]
+         |    topics: [ o ]
+         |output:
+         |  memory: { name: $table }
+         |  processors:
+         |    - mapping: 'root.id = this.id + 100'
+         |""".stripMargin
+    assert(streamIds(config, table) == Seq(100L, 101L, 102L))
+  }
 }

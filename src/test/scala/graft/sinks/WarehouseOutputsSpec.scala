@@ -36,6 +36,29 @@ class WarehouseOutputsSpec extends SparkSpec {
     OpenSearch.drop(name)
   }
 
+  test("opensearch output config: aws.enabled signs the bulk requests") {
+    val name = "os_" + uid()
+    val srv = OpenSearch.register(name, Credentials("AKOS", "SKOS"))
+    try {
+      graft.config.Pipeline.run(spark,
+        s"""input:
+           |  generate: { count: 5, mapping: 'root.id = this.seq' }
+           |output:
+           |  opensearch:
+           |    urls: [ "mem://$name" ]
+           |    index: docs
+           |    action: index
+           |    id: '$${! this.id }'
+           |    aws:
+           |      enabled: true
+           |      region: us-east-1
+           |      credentials: { id: AKOS, secret: SKOS }
+           |""".stripMargin)
+      assert(srv.es.rows("docs").size == 5)
+      assert(srv.rejected == 0)
+    } finally OpenSearch.drop(name)
+  }
+
   // ────────────────────── azure_table_storage ──────────────────────
 
   test("azure tables: INSERT conflicts, INSERT_REPLACE and INSERT_MERGE differ") {
