@@ -38,10 +38,13 @@ object LocalSession {
     if (master.startsWith("local-cluster")) {
       // the in-process Worker resolves the distribution through the
       // spark.test.home sysprop (falling back to a cwd that has no
-      // jars/ — "Cannot find any build directories"); SparkContext adds
-      // the JDK17 --add-opens to the executors' options itself
+      // jars/ — "Cannot find any build directories"), and its executor
+      // launcher reads the Scala version from the executor environment
+      // rather than probing for a source build; SparkContext adds the
+      // JDK17 --add-opens to the executors' options itself
       sys.props("spark.test.home") = sys.env.getOrElse("SPARK_HOME", "/opt/spark")
       builder
+        .config("spark.executorEnv.SPARK_SCALA_VERSION", "2.13")
         .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
         .config("spark.executor.extraJavaOptions",
           "-Dfile.encoding=UTF-8 -Dsun.jnu.encoding=UTF-8")

@@ -470,7 +470,7 @@ object SparkEntry {
 
     "p_noop" -> ((s, d) =>
       // `noop` (processors/noop.adoc:26)
-      FlowControl.noop(Tables.region(s, d)).orderBy(col("r_regionkey"))),
+      Tables.region(s, d).orderBy(col("r_regionkey"))),
 
     "p_workflow" -> ((s, d) => {
       // `workflow` DAG (processors/workflow.adoc:25-90): two independent

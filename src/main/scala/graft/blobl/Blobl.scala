@@ -28,8 +28,9 @@ object Blobl {
   def mapping(df: DataFrame, src: String,
               envVars: Map[String, String] = Map.empty,
               valueCol: String = "value",
-              metadataCol: Option[String] = None): DataFrame =
-    run(df, src, envVars, valueCol, metadataCol, fresh = true)
+              metadataCol: Option[String] = None,
+              guard: Option[Column] = None): DataFrame =
+    run(df, src, envVars, valueCol, metadataCol, fresh = true, guard)
 
   /** `meta x = …` needs somewhere to land: sources without connector
     * metadata (e.g. `generate`) carry no metadata column, but the
@@ -56,12 +57,16 @@ object Blobl {
   def mutation(df: DataFrame, src: String,
                envVars: Map[String, String] = Map.empty,
                valueCol: String = "value",
-               metadataCol: Option[String] = None): DataFrame =
-    run(df, src, envVars, valueCol, metadataCol, fresh = false)
+               metadataCol: Option[String] = None,
+               guard: Option[Column] = None): DataFrame =
+    run(df, src, envVars, valueCol, metadataCol, fresh = false, guard)
 
+  /** The mapping over the rows where `guard` holds (all rows when None);
+    * every other row keeps its value and metadata and is never deleted.
+    */
   private def run(df: DataFrame, src: String, envVars: Map[String, String],
                   valueCol: String, metadataCol: Option[String],
-                  fresh: Boolean): DataFrame = {
+                  fresh: Boolean, guard: Option[Column]): DataFrame = {
     Compiler.prepare(df)
     val m = Parser.parse(src)
     // try_parse_json: non-JSON content is a legal message (the reference
@@ -77,7 +82,8 @@ object Blobl {
     val res = Compiler.runStatements(m.stmts, init, env)
     // rows no root assignment touched pass through VERBATIM (not even
     // re-normalized — the content may not be JSON at all)
-    val newValue = when(res.assigned, docText(res.rootJson))
+    def within(c: Column): Column = guard.fold(c)(_ && c)
+    val newValue = when(within(res.assigned), docText(res.rootJson))
       .otherwise(col(valueCol))
     // one select so value and metadata expressions BOTH see the original
     // input columns (chained withColumn would make the second see the
@@ -85,14 +91,15 @@ object Blobl {
     val sel = df.columns.map {
       case c if c == valueCol => newValue.as(valueCol)
       case c if metadataCol.contains(c) =>
-        res.meta.getOrElse(col(c)).as(c)
+        res.meta.fold(col(c))(m =>
+          guard.fold(m)(g => when(g, m).otherwise(col(c)))).as(c)
       case c => col(c)
     }
     // value/meta/delete expressions may contain window functions
     // (batch_index, from_all) that must see the WHOLE batch: evaluate
     // everything in one projection over the unfiltered frame, then
     // filter on the materialized delete flag
-    withThis.select((sel :+ res.deleted.as("__graft_del")).toSeq: _*)
+    withThis.select((sel :+ within(res.deleted).as("__graft_del")).toSeq: _*)
       .filter(!col("__graft_del"))
       .drop("__graft_del")
   }

@@ -178,17 +178,20 @@ private[graft] object Component {
     if (!addr.startsWith("kafka://") || opts.isEmpty) addr
     else addr + (if (addr.contains("?")) "&" else "?") + opts.mkString("&")
 
-  /** A kafka component's `seed_brokers`/`addresses`. For a stream read
-    * or a write, a bare host:port speaks the same Kafka wire protocol
-    * our kafka:// client implements (config/examples/
-    * aws_cloudwatch_logs.yaml's `addresses: [localhost:9092]`); `wire`
-    * is the first address that transport serves, None for brokers only
-    * the native connector reaches.
+  /** A kafka component's `seed_brokers`/`addresses`, read by one rule
+    * in every form (batch read, stream read, write): `explicit` is the
+    * first `mem://` or `kafka://` address in list order, wherever it
+    * sits. Only when there is none does `wire` fall back to the first
+    * bare host:port, which speaks the same Kafka wire protocol our
+    * kafka:// client implements (config/examples/
+    * aws_cloudwatch_logs.yaml's `addresses: [localhost:9092]`). None
+    * means brokers only the native connector reaches.
     */
   final case class KafkaBrokers(addrs: Seq[String]) {
-    val wire: Option[String] =
-      addrs.map(a => if (a.contains("://")) a else s"kafka://$a")
-        .find(a => a.startsWith("mem://") || a.startsWith("kafka://"))
+    val explicit: Option[String] =
+      addrs.find(a => a.startsWith("mem://") || a.startsWith("kafka://"))
+    val wire: Option[String] = explicit.orElse(
+      addrs.find(!_.contains("://")).map(a => s"kafka://$a"))
   }
 
   def kafkaBrokers(b: JsonNode, role: String): KafkaBrokers =

@@ -133,9 +133,10 @@ private[config] object Inputs {
     batch = (spark, b, _) => {
       val brokers = Component.kafkaBrokers(b, "input")
       val topics0 = strings(b.get("topics"))
-      // a bounded read takes the first mem:// or kafka:// address as
-      // listed, wherever it sits; bare host:port entries are skipped
-      brokers.addrs.find(a => a.startsWith("mem://") || a.startsWith("kafka://")) match {
+      // an explicit wire address is read through its transport, as the
+      // stream form and the output do; a list of bare host:port brokers
+      // only goes through the native connector
+      brokers.explicit match {
         case Some(w) =>
           val mem = kafkaWire(b, w)
           // `regexp_topics: true` (inputs/kafka.adoc): the topic list is

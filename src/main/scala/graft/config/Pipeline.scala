@@ -333,6 +333,9 @@ object Pipeline {
           // the same tolerance the reference's counters have)
           if (partsAcc.value == 0L && counted.rdd.getNumPartitions > 0)
             counted.write.format("noop").mode("overwrite").save()
+          // an action's observations complete on the listener bus, after
+          // the action returns: drain it so the exporter reads them
+          org.apache.spark.sql.GraftListenerBus.drain(spark.sparkContext)
           exportMetrics(spark, m, rowsAcc.value, readings)
         }))
       case None => (df0, None)

@@ -21,36 +21,67 @@ import graft.operators.{BatchOps, Jq, Observe}
   * onto the pluggable batched client of [[graft.operators.Ai]].
   *
   * Envelope contract: the payload is `value: string`; `metadata:
-  * map<string,string>` optional; `error: string` is the error channel;
-  * `__seq: long` (input order) is used as the in-batch ordinal by
-  * part-indexed ops — synthesized from the split ordinal when an
+  * map<string,string>` optional; `error: string` is the error channel
+  * (null = healthy; a failed processor sets it and the row keeps
+  * flowing); `__seq: long` (input order) is used as the in-batch ordinal
+  * by part-indexed ops — synthesized from the split ordinal when an
   * exploding processor (unarchive/text_chunker/string_split) multiplies
   * rows. Binary payloads (compress/avro/protobuf/msgpack encodings)
   * travel base64-encoded in `value` — the envelope stays a string
   * column; a production sink that wants raw bytes applies `unbase64`.
+  *
+  * Guard contract: every entry compiles to a [[Step]], called with the
+  * [[Guard]] of the flow-control node around it (none at top level). A
+  * step processes the rows where the guard holds; every other row comes
+  * out unchanged and runs no side effect. A row-local entry (`mapping`,
+  * `bloblang`, `mutation`, `awk`, both `metric` forms, `log`, `noop`,
+  * `sleep`, `rate_limit` and the snapshot `cache get`) honours that in
+  * its own projection or row loop; every other entry is frame-level and
+  * runs through [[adapt]], which splits its input once into guarded and
+  * other rows. The flow-control nodes (`try`, `catch`, `try_catch`,
+  * `switch`, `retry`, `workflow`, and `processors`/`for_each`) are steps
+  * themselves: they guard their children and never split the frame, so
+  * a chain of row-local children stays one pass, in batch and stream.
   */
 object Processors {
 
   import graft.operators.{Ai, Command, Embeddings, FlowControl, Grok, Http, JavaScript, Sentry}
   import graft.functions.{CodecFunctions, TextFunctions}
 
-  def compile(p: JsonNode, env: Map[String, String]): DataFrame => DataFrame =
+  def compile(p: JsonNode, env: Map[String, String]): DataFrame => DataFrame = {
+    val s = step(p, env)
+    df => s(df, None)
+  }
+
+  private def step(p: JsonNode, env: Map[String, String]): Step =
     family.resolve(p, env) match {
       case Component.Found(make, node) => make(node.body, env)
       case t: Component.Templated =>
         // expansion needs a session; defer to first use so compile stays
         // callable before any frame exists
-        df => t.expand(df.sparkSession)(compile(_, env)(df))
+        (df, g) => t.expand(df.sparkSession)(step(_, env)(df, g))
     }
 
-  private type Make = (JsonNode, Map[String, String]) => DataFrame => DataFrame
+  /** The rows a step processes: those where `rows` holds (never null).
+    * `shared`: an earlier step of an enclosing node made the input.
+    */
+  private final case class Guard(rows: Column, shared: Boolean)
 
-  private def entry(names: String*)(make: Make): Seq[(String, Make)] =
+  private type Step = (DataFrame, Option[Guard]) => DataFrame
+  private type Make = (JsonNode, Map[String, String]) => Step
+  private type Frame = (JsonNode, Map[String, String]) => DataFrame => DataFrame
+
+  /** Row-local entries and flow-control nodes: they honour the guard. */
+  private def guarded(names: String*)(make: Make): Seq[(String, Make)] =
     names.map(_ -> make)
 
-  /** Entries whose compile depends on which of their names was used. */
-  private def byKind(names: String*)(make: String => Make): Seq[(String, Make)] =
-    names.map(k => k -> make(k))
+  /** Frame-level entries, run under a guard through [[adapt]]. */
+  private def entry(names: String*)(make: Frame): Seq[(String, Make)] =
+    guarded(names: _*)((body, env) => adapt(make(body, env)))
+
+  /** Frame-level entries whose compile depends on the name used. */
+  private def byKind(names: String*)(make: String => Frame): Seq[(String, Make)] =
+    names.flatMap(k => entry(k)(make(k)))
 
   /** Connector/runtime processors that cannot run in this environment —
     * kept as an explicit list so the error names the real reason.
@@ -66,16 +97,18 @@ object Processors {
           "network egress, or an embedded runtime this container lacks"
       else s"processor '$other' not supported in config form yet")(
     // ── mapping layer ────────────────────────────────────────────
-    entry("mapping", "bloblang") { (body, env) =>
-      df => {
+    guarded("mapping", "bloblang") { (body, env) =>
+      (df, g) => {
         val (d, meta) = Blobl.ensureMeta(df, body.asText)
-        Blobl.mapping(d, body.asText, env, metadataCol = meta)
+        Blobl.mapping(d, body.asText, env, metadataCol = meta,
+          guard = g.map(_.rows))
       }
     },
-    entry("mutation") { (body, env) =>
-      df => {
+    guarded("mutation") { (body, env) =>
+      (df, g) => {
         val (d, meta) = Blobl.ensureMeta(df, body.asText)
-        Blobl.mutation(d, body.asText, env, metadataCol = meta)
+        Blobl.mutation(d, body.asText, env, metadataCol = meta,
+          guard = g.map(_.rows))
       }
     },
     entry("jq") { (body, env) =>
@@ -86,15 +119,13 @@ object Processors {
       df => Jq.jmespath(df, body.path("query").asText(body.asText),
         "value", "value")
     },
-    entry("noop") { (body, env) =>
-      identity
-    },
-    entry("awk") { (body, env) =>
+    guarded("noop")((_, _) => (df, _) => df),
+    guarded("awk") { (body, env) =>
       // processors/awk.adoc:26 — codec none|text|json + program;
       // custom json_*/metadata_*/timestamp functions built in
       val program = body.get("program").asText
       val codec = body.path("codec").asText("text")
-      df => graft.operators.AwkOps.awk(df, program, codec)
+      (df, g) => graft.operators.AwkOps.awk(df, program, codec, g.map(_.rows))
     },
     entry("javascript") { (body, env) =>
       // processors/javascript.adoc:26 — `code` or `file` (exactly
@@ -171,25 +202,27 @@ object Processors {
       df => graft.agent.AgentRuntime.processor(df, command, mcpServer, cwd)
     },
     // ── flow control / error channel (§2.2) ──────────────────────
-    entry("switch") { (body, env) =>
+    guarded("switch") { (body, env) =>
       // processors/switch.adoc:26 — first matching case's processors
-      // run; non-matching messages pass through unchanged
+      // run; non-matching messages pass through unchanged. The case
+      // index is computed once, before any case's children change the
+      // fields the checks read.
       val cases = body.elements().asScala.toSeq.map { c =>
         val check = Option(c.get("check")).map(_.asText).filter(_.nonEmpty)
-        val procs = children(c.get("processors"), env)
-        (check, procs)
+        (check, steps(c.get("processors"), env))
       }
-      df => {
-        val claimed = cases.foldLeft((lit(false), Seq.empty[DataFrame])) {
-          case ((taken, outs), (check, procs)) =>
-            val pred = check.map(Blobl.predicateJson(df, _, env,
-              metadataCol = metaColOf(df))).getOrElse(lit(true))
-            val mine = df.filter(!taken && pred)
-            (taken || pred, outs :+ procs(mine))
-        }
-        val untouched = df.filter(!claimed._1)
-        (claimed._2 :+ untouched)
-          .reduce(_.unionByName(_, allowMissingColumns = true))
+      (df, g) => {
+        val preds = cases.map(_._1.fold(lit(true))(Blobl.predicateJson(
+          df, _, env, metadataCol = metaColOf(df))))
+        val index = FlowControl.switch(
+          preds.zipWithIndex.map { case (p, k) => (p, lit(k)) }, lit(-1))
+        val (d, caseCol) = pin(df, g.fold(index)(x => when(x.rows, index)),
+          orElse = lit(-1))
+        cases.zipWithIndex.foldLeft((d, g.exists(_.shared))) {
+          case ((cur, shared), ((_, kids), k)) =>
+            (chain(kids, cur, col(caseCol) === k, shared),
+              shared || kids.nonEmpty)
+        }._1.drop(caseCol)
       }
     },
     entry("branch") { (body, env) =>
@@ -250,56 +283,67 @@ object Processors {
         withErr.drop("__branch_err", "__brid")
       }
     },
-    entry("try") { (body, env) =>
-      // processors/try.adoc:26 — children skip already-errored rows
-      tryEach(childList(body, env))
+    guarded("try") { (body, env) =>
+      // processors/try.adoc:26 — each child skips the rows an earlier
+      // processor errored
+      val kids = steps(body, env)
+      (df, g) => chain(kids, FlowControl.withErrorChannel(df),
+        within(g, col("error").isNull), g.exists(_.shared))
     },
-    entry("try_catch") { (body, env) =>
+    guarded("try_catch") { (body, env) =>
       // processors/try_catch.adoc — try semantics over `processors`;
       // failures move into a metadata object ({"what": …}, field
       // `error_metadata`) with the flag CLEARED before `catch` runs,
       // so recovery reads @error.what and new catch-side failures
       // surface as fresh errors
-      val procs = tryEach(
-        childList(Option(body.get("processors")).orNull, env))
-      val catchProcs = children(Option(body.get("catch")).orNull, env)
+      val tryKids = steps(body.get("processors"), env)
+      val catchKids = steps(body.get("catch"), env)
       val errField = body.path("error_metadata").asText("error")
-      df => {
-        val tried = procs(df)
-        val ok = tried.filter(col("error").isNull)
-        val cleared = tried.filter(col("error").isNotNull)
-          .withColumn("metadata", metaPut(metaColOf(tried),
+      (df, g) => {
+        val shared = g.exists(_.shared)
+        val (d, on) = pin(FlowControl.withErrorChannel(df), within(g, lit(true)))
+        val tried = chain(tryKids, d, col(on) && col("error").isNull, shared)
+        val (t, caught) = pin(tried, col(on) && col("error").isNotNull)
+        val cleared = t
+          .withColumn("metadata", when(col(caught), metaPut(metaColOf(t),
             lit(errField), to_json(struct(col("error").as("what")))))
-          .withColumn("error", lit(null).cast("string"))
-        ok.unionByName(catchProcs(cleared), allowMissingColumns = true)
+            .otherwise(metaColOf(t).map(col).orNull))
+          .withColumn("error", when(col(caught), lit(null)).otherwise(col("error")))
+        chain(catchKids, cleared, col(caught), shared || tryKids.nonEmpty)
+          .drop(on, caught)
       }
     },
-    entry("catch") { (body, env) =>
+    guarded("catch") { (body, env) =>
       // processors/catch.adoc:26 — children run on errored rows only,
       // then the error clears
-      val procs = children(body, env)
-      df => FlowControl.catchErrors(df, procs)
-    },
-    entry("retry") { (body, env) =>
-      // processors/retry.adoc:26 — re-run children on still-errored
-      // rows up to max_retries (deterministic transforms converge
-      // after one pass; the loop matters for external-call children)
-      val procs = children(body.get("processors"), env)
-      val maxRetries = body.path("max_retries").asInt(3)
-      df => {
-        var cur = procs(FlowControl.withErrorChannel(df))
-        var i = 0
-        while (i < maxRetries) {
-          val ok = cur.filter(col("error").isNull)
-          val redo = cur.filter(col("error").isNotNull)
-            .withColumn("error", lit(null).cast("string"))
-          cur = ok.unionByName(procs(redo), allowMissingColumns = true)
-          i += 1
-        }
-        cur
+      val kids = steps(body, env)
+      (df, g) => {
+        val (d, caught) = pin(FlowControl.withErrorChannel(df),
+          within(g, col("error").isNotNull))
+        chain(kids, d, col(caught), g.exists(_.shared))
+          .withColumn("error", when(col(caught), lit(null)).otherwise(col("error")))
+          .drop(caught)
       }
     },
-    byKind("for_each", "processors") { kind => (body, env) =>
+    guarded("retry") { (body, env) =>
+      // processors/retry.adoc:26 — re-run children on still-errored
+      // rows up to max_retries (deterministic transforms converge
+      // after one pass; the loop matters for external-call children):
+      // a fixed unroll, each pass guarded by the rows the last one
+      // left errored
+      val kids = steps(body.get("processors"), env)
+      val maxRetries = body.path("max_retries").asInt(3)
+      (df, g) => {
+        val (d, redo) = pin(FlowControl.withErrorChannel(df), within(g, lit(true)))
+        val first = chain(kids, d, col(redo), g.exists(_.shared))
+        (1 to maxRetries).foldLeft(first) { (cur, _) =>
+          val again = cur.withColumn(redo, col(redo) && col("error").isNotNull)
+            .withColumn("error", when(col(redo), lit(null)).otherwise(col("error")))
+          chain(kids, again, col(redo), shared = true)
+        }.drop(redo)
+      }
+    },
+    Seq("for_each", "processors").flatMap(kind => guarded(kind) { (body, env) =>
       // per-message singleton batches = Spark's default row semantics
       // — UNLESS the chain mutates a cache, where the reference's
       // contract is that message i finishes the WHOLE chain before
@@ -308,7 +352,8 @@ object Processors {
       // message is hydrated"). That cross-message coherence is
       // inherently sequential in ANY engine; only then do we run a
       // driver loop over the (control-sized) batch. Stateless chains
-      // keep the distributed row-wise plan.
+      // keep the distributed row-wise plan, their children under this
+      // node's guard.
       val mutatesCache = {
         def walk(n: JsonNode): Boolean = n match {
           case a: com.fasterxml.jackson.databind.node.ArrayNode =>
@@ -321,20 +366,22 @@ object Processors {
         }
         kind == "for_each" && walk(body)
       }
-      val chain = children(body, env)
-      if (!mutatesCache) chain
-      else df => {
+      val kids = steps(body, env)
+      if (!mutatesCache)
+        (df, g) => g.fold(run(kids)(df))(x => chain(kids, df, x.rows, x.shared))
+      else adapt { df =>
+        val all = run(kids)
         val spark = df.sparkSession
         val inSchema = df.schema
         val ordered = if (df.columns.contains("__seq"))
           df.orderBy(col("__seq")) else df
         val rows = ordered.collect() // bounded: for_each control batch
-        if (rows.isEmpty) chain(df.limit(0))
+        if (rows.isEmpty) all(df.limit(0))
         else {
           val outs = rows.toSeq.map { r =>
             val single = spark.createDataFrame(
               java.util.Arrays.asList(r), inSchema)
-            val out = chain(single)
+            val out = all(single)
             // materialize NOW so this message's cache writes precede
             // the next message's reads
             (out.schema, out.collect().toSeq)
@@ -344,7 +391,7 @@ object Processors {
           }.reduce(_.unionByName(_, allowMissingColumns = true))
         }
       }
-    },
+    }),
     entry("parallel") { (body, env) =>
       val procs = children(body.get("processors"), env)
       val cap = body.path("cap").asInt(0)
@@ -361,7 +408,7 @@ object Processors {
           metadataCol = metaColOf(d))).isEmpty,
         procs, maxLoops)
     },
-    entry("workflow") { (body, env) =>
+    guarded("workflow") { (body, env) =>
       // processors/workflow.adoc — DAG of named branches. `order`
       // may be flat or tiered; when omitted, the DAG is INFERRED
       // from the mappings (workflow.adoc:100-105): branch B depends
@@ -415,10 +462,10 @@ object Processors {
         }
         done.toSeq
       }
-      val branchFns = order.map(n =>
-        n -> compile(yamlObj("branch", stages.get(n)), env)).toMap
-      df0 => {
-        val df = FlowControl.withErrorChannel(df0)
+      val branchSteps = order.map(n =>
+        n -> step(yamlObj("branch", stages.get(n)), env)).toMap
+      (df0, g) => {
+        val (df, on) = pin(FlowControl.withErrorChannel(df0), within(g, lit(true)))
         val emptyArr = array().cast("array<string>")
         var cur = df
           .withColumn("__wf_succ", emptyArr)
@@ -438,24 +485,26 @@ object Processors {
           .withColumn("__wf_prev",
             to_json(variant_get(try_parse_json(col("value")), vpath,
               "variant")))
-        order.foreach { b =>
-          val eligC = deps(b).foldLeft(
-            col("error").isNull && !array_contains(col("__wf_done0"),
-              lit(b)))((c, a) => c && array_contains(col("__wf_succ"),
-              lit(a)))
-          val elig = cur.filter(coalesce(eligC, lit(false)))
-          val rest = cur.filter(!coalesce(eligC, lit(false)))
-            .withColumn("__wf_skip",
-              array_append(col("__wf_skip"), lit(b)))
-          val ran = branchFns(b)(elig)
-          val ok = ran.filter(col("error").isNull)
-            .withColumn("__wf_succ",
-              array_append(col("__wf_succ"), lit(b)))
-          val bad = ran.filter(col("error").isNotNull)
-            .withColumn("__wf_fail", map_concat(col("__wf_fail"),
+        // each branch runs over its eligible rows; the outcome is
+        // recorded per row by guarded projections
+        order.zipWithIndex.foreach { case (b, i) =>
+          val eligC = deps(b).foldLeft(col(on) && col("error").isNull &&
+            !array_contains(col("__wf_done0"), lit(b)))((c, a) =>
+            c && array_contains(col("__wf_succ"), lit(a)))
+          val (e, elig) = pin(cur, eligC)
+          val ran = branchSteps(b)(e,
+            Some(Guard(col(elig), g.exists(_.shared) || i > 0)))
+          val failed = col(elig) && col("error").isNotNull
+          cur = ran
+            .withColumn("__wf_succ", when(col(elig) && col("error").isNull,
+              array_append(col("__wf_succ"), lit(b))).otherwise(col("__wf_succ")))
+            .withColumn("__wf_skip", when(col(on) && !col(elig),
+              array_append(col("__wf_skip"), lit(b))).otherwise(col("__wf_skip")))
+            .withColumn("__wf_fail", when(failed, map_concat(col("__wf_fail"),
               map(lit(b), coalesce(col("error"), lit("failed")))))
-            .withColumn("error", lit(null).cast("string"))
-          cur = ok.unionByName(bad).unionByName(rest)
+              .otherwise(col("__wf_fail")))
+            .withColumn("error", when(failed, lit(null)).otherwise(col("error")))
+            .drop(elig)
         }
         // store the execution record in the document at metaPath
         // (only JSON-object payloads can carry it — same constraint
@@ -472,7 +521,7 @@ object Processors {
           (seg, inner) => concat(lit("{\"" + seg + "\":"), inner,
             lit("}")))
         cur.withColumn("value",
-            when(try_parse_json(col("value")).isNotNull &&
+            when(col(on) && try_parse_json(col("value")).isNotNull &&
                  schema_of_variant(try_parse_json(col("value")))
                    .startsWith("OBJECT"),
               call_function("graft_json_assign",
@@ -480,7 +529,7 @@ object Processors {
                 nested))
               .otherwise(col("value")))
           .drop("__wf_succ", "__wf_skip", "__wf_fail", "__wf_done0",
-            "__wf_prev")
+            "__wf_prev", on)
       }
     },
     entry("crash") { (body, env) =>
@@ -489,44 +538,40 @@ object Processors {
       df => Observe.crashOn(df,
         Blobl.predicateJson(df, check, env, metadataCol = metaColOf(df)), msg)
     },
-    entry("sleep") { (body, env) =>
-      // processors/sleep.adoc:26 — backpressure belongs to source
-      // admission in Spark (Resources.rateLimitOptions); in-plan sleep
-      // is identity
-      identity
+    // processors/sleep.adoc:26 — backpressure belongs to source
+    // admission in Spark (Resources.rateLimitOptions), and so does
+    // rate_limits/local.adoc:26 (maxRowsPerTrigger): in-plan both are
+    // identity
+    guarded("sleep", "rate_limit")((_, _) => (df, _) => df),
+    guarded("log") { (body, env) =>
+      (df, g) => Observe.logSample(df, every = body.path("every").asLong(1000),
+        prefix = body.path("prefix").asText("pipeline"), guard = g.map(_.rows))
     },
-    entry("rate_limit") { (body, env) =>
-      // rate_limits/local.adoc:26 — admission control is a SOURCE
-      // option in Spark (maxRowsPerTrigger); in-plan form is identity
-      identity
-    },
-    entry("log") { (body, env) =>
-      df => Observe.logSample(df, every = body.path("every").asLong(1000),
-        prefix = body.path("prefix").asText("pipeline"))
-    },
-    entry("metric") { (body, env) =>
+    guarded("metric") { (body, env) =>
       // processors/metric.adoc — attach a named metric at this point
       // of the flow; readings surface through the `metrics:` exporter
       // at flush. counter = rows seen; gauge = the interpolated
-      // `value` (max over the frame — observe() is whole-frame).
+      // `value` (max over the frame — observe() is whole-frame). Only
+      // the guarded rows count.
       val name = body.path("name").asText("pipeline_metric")
       val mtype = body.path("type").asText("counter")
       val labelTpls: Seq[(String, String)] =
         Option(body.get("labels")).map(_.properties().asScala.toSeq
           .map(e => e.getKey -> e.getValue.asText)).getOrElse(Nil)
-      if (labelTpls.isEmpty) df => {
+      if (labelTpls.isEmpty) (df, g) => {
+        def only(c: Column): Column = g.fold(c)(x => when(x.rows, c))
         val (d, obs) = mtype match {
           case "gauge" if body.has("value") =>
             val vC = interp(df, body.get("value").asText, env).cast("double")
-            Observe.metric(df, name, Seq(max(vC).as("value")))
+            Observe.metric(df, name, Seq(max(only(vC)).as("value")))
           case _ =>
-            Observe.metric(df, name, Seq(count(lit(1)).as("count")))
+            Observe.metric(df, name, Seq(count(only(lit(1))).as("count")))
         }
         Pipeline.runReadings.value
           .foreach(_.observed.add((name, mtype, obs)))
         d
       }
-      else df => {
+      else (df, g) => {
         // labeled form: per-label-set readings via an accumulator on
         // the SAME action (labels interpolate per message —
         // processors/metric.adoc labels)
@@ -541,22 +586,26 @@ object Processors {
         df.sparkSession.sparkContext.register(acc, s"graft_metric_$name")
         Pipeline.runReadings.value.foreach(
           _.labeled.add((name, mtype, labelTpls.map(_._1), acc)))
-        val tagged = df.withColumn("__mlv", lvC).withColumn("__mgv", gvC)
+        val tagged0 = df.withColumn("__mlv", lvC).withColumn("__mgv", gvC)
+        val tagged = g.fold(tagged0)(x => tagged0.withColumn("__mgd", x.rows))
         val schema = tagged.schema
         implicit val enc = org.apache.spark.sql.Encoders.row(schema)
         val lI = schema.fieldIndex("__mlv")
         val gI = schema.fieldIndex("__mgv")
+        val dI = if (g.isEmpty) -1 else schema.fieldIndex("__mgd")
         tagged.mapPartitions { it =>
           val local = scala.collection.mutable
             .HashMap.empty[String, (Long, Double)]
           it.map { r =>
-            val k = r.getString(lI)
-            val g = r.getDouble(gI)
-            val cur = local.getOrElse(k, (0L, Double.NegativeInfinity))
-            local(k) = (cur._1 + 1, math.max(cur._2, g))
+            if (dI < 0 || r.get(dI) == true) {
+              val k = r.getString(lI)
+              val g = r.getDouble(gI)
+              val cur = local.getOrElse(k, (0L, Double.NegativeInfinity))
+              local(k) = (cur._1 + 1, math.max(cur._2, g))
+            }
             r
           } ++ { acc.add(local.toMap); Iterator.empty }
-        }.drop("__mlv", "__mgv")
+        }.drop("__mlv", "__mgv", "__mgd")
       }
     },
     entry("benchmark") { (body, env) =>
@@ -1032,7 +1081,7 @@ object Processors {
       }
     },
     // ── caches / resources / external calls ──────────────────────
-    entry("cache") { (body, env) =>
+    guarded("cache") { (body, env) =>
       // processors/cache.adoc:26 — `get` replaces content with the
       // cache value for the key; a miss feeds the error channel.
       // In-process mutable backends (memory family + file +
@@ -1043,13 +1092,14 @@ object Processors {
       // Snapshot backends (redis/memcached/… views) keep the
       // broadcast-join form — the scale path for read-only
       // enrichment. Multilevel: read-through with promotion into
-      // earlier levels, write-through to all levels.
+      // earlier levels, write-through to all levels. The snapshot form
+      // is row-local; the ordered kernel runs through the adapter.
       val resource = body.get("resource").asText
       val keyTpl = body.path("key").asText("${! content() }")
       val valueTpl = body.path("value").asText("${! content() }")
       val op = body.path("operator").asText("get")
-      df => Caches.cacheLevelsOf(resource) match {
-        case Some(levels) =>
+      (df, g) => Caches.cacheLevelsOf(resource) match {
+        case Some(levels) => adapt { df =>
           val writing = op == "set" || op == "add"
           val withErr = FlowControl.withErrorChannel(df)
           val keyed0 = withErr.withColumn("__ck",
@@ -1101,6 +1151,7 @@ object Processors {
             }
           }
           if (writing) out.drop("__ck", "__cvw") else out.drop("__ck")
+        }(df, g)
         case None =>
           require(op == "get",
             s"cache operator '$op': snapshot cache backends are read-only here")
@@ -1110,8 +1161,10 @@ object Processors {
             interp(df, keyTpl, env))
           val d = FlowControl.withErrorChannel(keyed)
             .join(broadcast(cacheDf), Seq("__ck"), "left")
-          d.withColumn("value", coalesce(col("__cv"), col("value")))
-            .withColumn("error", when(col("__cv").isNull,
+          val hit = g.fold(col("__cv"))(x => when(x.rows, col("__cv")))
+          val miss = g.fold(col("__cv").isNull)(x => x.rows && col("__cv").isNull)
+          d.withColumn("value", coalesce(hit, col("value")))
+            .withColumn("error", when(miss,
               lit("cache miss")).otherwise(col("error")))
             .drop("__ck", "__cv")
       }
@@ -1713,40 +1766,53 @@ object Processors {
         "__prompt", "__reply", batchSize, client)
       .withColumn("value", col("__reply")).drop("__prompt", "__reply")
 
-  private def childList(n: JsonNode,
-                        env: Map[String, String]): Seq[DataFrame => DataFrame] =
+  private def steps(n: JsonNode, env: Map[String, String]): Seq[Step] =
     Option(n).map(_.elements().asScala.toSeq).getOrElse(Seq.empty)
-      .map(compile(_, env))
+      .map(step(_, env))
 
-  private def children(n: JsonNode, env: Map[String, String]): DataFrame => DataFrame =
-    childList(n, env).reduceOption(_ andThen _)
-      .getOrElse((df: DataFrame) => df)
+  /** Steps in order over every row. */
+  private def run(kids: Seq[Step]): DataFrame => DataFrame =
+    df => kids.foldLeft(df)((d, s) => s(d, None))
 
-  /** try semantics (processors/try.adoc): each child runs over the rows
-    * no earlier child errored; an errored row skips the rest. The rows
-    * set aside at each step join the last child's output in one union.
-    * Each step reads its input twice (healthy and errored slices), so a
-    * batch plan barriers every child's output that a later child reads
-    * (eager localCheckpoint): each child runs once per row, which the
-    * side-effecting ones (`http`, a labeled `metric`, `log`) need. A
-    * single child needs no barrier. Streaming plans cannot checkpoint:
-    * their children run as one chain over the healthy slice, so there a
-    * row an earlier child errored still reaches the later children.
+  private def children(n: JsonNode, env: Map[String, String]) = run(steps(n, env))
+
+  /** Steps in order, each over the rows where `rows` holds on its own
+    * input (null reads false: a frame-level child may drop a flag).
     */
-  private def tryEach(procs: Seq[DataFrame => DataFrame]): DataFrame => DataFrame =
-    df => {
-      val d = FlowControl.withErrorChannel(df)
-      val steps =
-        if (d.isStreaming) procs.reduceOption(_ andThen _).toSeq else procs
-      val (out, skipped) = steps.zipWithIndex.foldLeft(
-          (d, List.empty[DataFrame])) {
-        case ((prev, skip), (p, i)) =>
-          val cur = if (i == 0) prev else prev.localCheckpoint()
-          (p(cur.filter(col("error").isNull)),
-            cur.filter(col("error").isNotNull) :: skip)
-      }
-      (out :: skipped).reduce(_.unionByName(_, allowMissingColumns = true))
+  private def chain(kids: Seq[Step], df: DataFrame, rows: Column,
+                    shared: Boolean): DataFrame = {
+    val g = coalesce(rows, lit(false))
+    kids.zipWithIndex.foldLeft(df) { case (d, (s, i)) =>
+      s(d, Some(Guard(g, shared || i > 0)))
     }
+  }
+
+  /** `c` over the rows of the enclosing guard, if any. */
+  private def within(g: Option[Guard], c: Column): Column = g.fold(c)(_.rows && c)
+
+  private val pinSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** `c` (null reads `orElse`) materialized as a fresh column, so the
+    * children that change what it reads do not change which rows run.
+    */
+  private def pin(df: DataFrame, c: Column,
+                  orElse: Column = lit(false)): (DataFrame, String) = {
+    val name = s"__flow${pinSeq.incrementAndGet()}"
+    (df.withColumn(name, coalesce(c, orElse)), name)
+  }
+
+  /** A frame-level processor as a step: under a guard it splits its
+    * input once, the guarded rows through `f` and the rest unchanged. A
+    * batch input an earlier step produced is barriered first (eager
+    * `localCheckpoint`), so that step runs once although both slices
+    * read it.
+    */
+  private def adapt(f: DataFrame => DataFrame): Step = {
+    case (df, None) => f(df)
+    case (df, Some(Guard(rows, shared))) =>
+      val d = if (shared && !df.isStreaming) df.localCheckpoint() else df
+      f(d.filter(rows)).unionByName(d.filter(!rows), allowMissingColumns = true)
+  }
 
   private def argvOf(body: JsonNode): Seq[String] = {
     val name = body.get("name").asText

@@ -63,7 +63,6 @@ final class McpServer(spark: SparkSession, repositoryDir: String,
                         handler: ObjectNode => Seq[String])
 
   private val toolsByName = scala.collection.mutable.LinkedHashMap.empty[String, Tool]
-  private val cacheStores = TrieMap.empty[String, TrieMap[String, String]]
 
   /** Resource labels scanned but not exposed (mcp.enabled: false). */
   private val registeredOnly = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -195,53 +194,45 @@ final class McpServer(spark: SparkSession, repositoryDir: String,
 
   // ── caches ─────────────────────────────────────────────────────────
 
-  /** In-process cache store. memory/lru/ttlru/ristretto/noop seed from
-    * `init`; `file` persists one file per key under `directory` — the
-    * same backends [[graft.config.Caches.register]] treats as in-process.
+  /** A cache resource, registered through [[graft.config.Caches]] like
+    * a pipeline's `cache_resources`, so the tools and a pipeline's
+    * `cache` processor share one store per label. Only the writable
+    * backends (memory/lru/ttlru/ristretto/noop seed from `init`, `file`
+    * keeps one file per key under `directory`, `sql`, and multilevel
+    * over those) can back the get/set tools.
     */
   private def addCache(res: JsonNode): Unit = {
     if (!passesFilters(res)) return
     val label = labelOf(res)
-    val (kind, body) = graft.config.Component.kindOf(componentNode(res))
-    val fileDir: Option[Path] = kind match {
-      case "memory" | "lru" | "ttlru" | "ristretto" | "noop" =>
-        val store = cacheStores.getOrElseUpdate(label, TrieMap.empty)
-        Option(body.get("init")).foreach(_.properties().asScala
-          .foreach(e => store.put(e.getKey, e.getValue.asText)))
-        None
-      case "file" =>
-        val dir = Paths.get(body.get("directory").asText)
-        Files.createDirectories(dir)
-        Some(dir)
-      case other => throw new IllegalArgumentException(
-        s"cache '$other' is environment-blocked for MCP tools " +
-          "(network backend); use memory/lru/ttlru/ristretto/file")
-    }
+    val node = componentNode(res)
+    val kind = graft.config.Component.kindOf(node)._1
+    graft.config.Caches.register(spark, Seq(node.put("label", label)), env)
+    val levels = graft.config.Caches.cacheLevelsOf(label).getOrElse(
+      throw new IllegalArgumentException(
+        s"cache '$kind' is read-only here, so it cannot back MCP tools; " +
+          "use memory/lru/ttlru/ristretto/file/sql"))
     val (enabled, description, _) = mcpMeta(res)
     if (!enabled) { registeredOnly += label; return }
 
     // Keys come from the MCP caller (an agent guest or anything that can
     // POST to the HTTP endpoint), so a file-backed cache must confine the
     // resolved path to its directory: reject separators / parent refs and
-    // double-check the normalized result stays under `dir`.
-    def keyPath(dir: Path, key: String): Path = {
-      require(key.nonEmpty && !key.contains('/') && !key.contains('\\') &&
-        key != "." && key != "..",
-        s"invalid cache key (path separators and '..' are not allowed): $key")
-      val p = dir.resolve(key).normalize()
-      require(p.startsWith(dir.normalize()), s"cache key escapes directory: $key")
-      p
+    // double-check the normalized result stays under it.
+    def checked(key: String): String = {
+      levels.flatMap(_.fileDir).foreach { d =>
+        val dir = Paths.get(d).normalize()
+        require(key.nonEmpty && !key.contains('/') && !key.contains('\\') &&
+          key != "." && key != "..",
+          s"invalid cache key (path separators and '..' are not allowed): $key")
+        require(dir.resolve(key).normalize().startsWith(dir),
+          s"cache key escapes directory: $key")
+      }
+      key
     }
-    def get(key: String): Option[String] = fileDir match {
-      case Some(dir) =>
-        val p = keyPath(dir, key)
-        if (Files.exists(p)) Some(Files.readString(p)) else None
-      case None => cacheStores(label).get(key)
-    }
-    def set(key: String, value: String): Unit = fileDir match {
-      case Some(dir) => Files.writeString(keyPath(dir, key), value); ()
-      case None => cacheStores(label).put(key, value); ()
-    }
+    def get(key: String): Option[String] =
+      levels.iterator.map(_.get(checked(key))).collectFirst { case Some(v) => v }
+    def set(key: String, value: String): Unit =
+      levels.foreach(_.put(checked(key), value))
 
     val getSchema = mapper.createObjectNode()
     getSchema.put("type", "object")

@@ -2,7 +2,7 @@ package graft.operators
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 
 import graft.awk.Awk
@@ -337,66 +337,73 @@ object AwkOps {
       }))
   }
 
-  /** The processor: run `program` per message under `codec`. */
+  /** The processor: run `program` per message under `codec`, over the
+    * rows where `guard` holds (all rows when None); any other row passes
+    * through untouched.
+    */
   def awk(df0: DataFrame, program: String,
-          codec: String = "text"): DataFrame = {
+          codec: String = "text", guard: Option[Column] = None): DataFrame = {
     require(Seq("none", "text", "json").contains(codec),
       s"unrecognised codec: $codec")
     val prog = Awk.parse(program) // driver-side: syntax errors fail fast
-    val df = Envelope.ensure(df0)
+    val df = guard.fold(Envelope.ensure(df0))(g =>
+      Envelope.ensure(df0).withColumn("__awk_g", g))
     val schema = df.schema
     val vIdx = schema.fieldIndex(Envelope.ValueCol)
     val mIdx = schema.fieldIndex(Envelope.MetadataCol)
     val eIdx = schema.fieldIndex(Envelope.ErrorCol)
+    val gIdx = if (guard.isEmpty) -1 else schema.fieldIndex("__awk_g")
 
     val out = df.mapPartitions { rows =>
       val mapper = new ObjectMapper()
       val ctx = new MsgCtx(mapper)
       val funcs = hostFuncs(ctx)
       rows.map { row =>
-        val meta = collection.mutable.LinkedHashMap.empty[String, String]
-        val prior = row.getMap[String, String](mIdx)
-        if (prior != null) prior.foreach { case (k, v) => meta(k) = v }
-        ctx.reset(row.getString(vIdx), meta)
-        var err: String = row.getString(eIdx)
-        var newValue = ctx.value
-        try {
-          val vars = collection.mutable.Map.empty[String, String]
-          val input = codec match {
-            case "json" =>
-              val flat = collection.mutable.Map.empty[String, String]
-              flatten("", ctx.json(), flat)
-              flat.foreach { case (k, v) =>
+        if (gIdx >= 0 && row.get(gIdx) != true) row else {
+          val meta = collection.mutable.LinkedHashMap.empty[String, String]
+          val prior = row.getMap[String, String](mIdx)
+          if (prior != null) prior.foreach { case (k, v) => meta(k) = v }
+          ctx.reset(row.getString(vIdx), meta)
+          var err: String = row.getString(eIdx)
+          var newValue = ctx.value
+          try {
+            val vars = collection.mutable.Map.empty[String, String]
+            val input = codec match {
+              case "json" =>
+                val flat = collection.mutable.Map.empty[String, String]
+                flatten("", ctx.json(), flat)
+                flat.foreach { case (k, v) =>
+                  vars(varInvalid.replaceAllIn(k, "_")) = v
+                }
+                " "
+              case "text" => ctx.value
+              case _ => " "
+            }
+            if (codec != "none")
+              meta.foreach { case (k, v) =>
                 vars(varInvalid.replaceAllIn(k, "_")) = v
               }
-              " "
-            case "text" => ctx.value
-            case _ => " "
-          }
-          if (codec != "none")
-            meta.foreach { case (k, v) =>
-              vars(varInvalid.replaceAllIn(k, "_")) = v
+            val interp = new Awk.Interp(prog, funcs)
+            val res = interp.run(input, vars.toMap)
+            if (res.exitCode != 0)
+              err = "awk interpreter returned non-zero exit code: " +
+                res.exitCode
+            else {
+              val printed = res.output.stripSuffix("\n")
+              newValue = ctx.finish(printed)
             }
-          val interp = new Awk.Interp(prog, funcs)
-          val res = interp.run(input, vars.toMap)
-          if (res.exitCode != 0)
-            err = "awk interpreter returned non-zero exit code: " +
-              res.exitCode
-          else {
-            val printed = res.output.stripSuffix("\n")
-            newValue = ctx.finish(printed)
+          } catch {
+            case e: Awk.AwkError => err = s"awk: ${e.getMessage}"
+            case e: Exception => err = s"awk: ${e.getMessage}"
           }
-        } catch {
-          case e: Awk.AwkError => err = s"awk: ${e.getMessage}"
-          case e: Exception => err = s"awk: ${e.getMessage}"
+          val vals = row.toSeq.toArray
+          vals(vIdx) = newValue
+          vals(mIdx) = ctx.meta.toMap
+          vals(eIdx) = err
+          Row.fromSeq(vals.toIndexedSeq)
         }
-        val vals = row.toSeq.toArray
-        vals(vIdx) = newValue
-        vals(mIdx) = ctx.meta.toMap
-        vals(eIdx) = err
-        Row.fromSeq(vals.toIndexedSeq)
       }
     }(ExpressionEncoder(RowEncoder.encoderFor(schema)))
-    out
+    if (gIdx >= 0) out.drop("__awk_g") else out
   }
 }

@@ -151,15 +151,6 @@ object BatchOps {
       .withColumn("part", to_json(col("__pv")))
       .drop("__pv")
 
-  /** `unarchive` format `json_map`: one row per key of a JSON object
-    * payload, key in `part_key`. */
-  def unarchiveJsonMap(df: DataFrame, payload: Column): DataFrame =
-    df.select(df.columns.map(col) :+
-        explode(try_parse_json(payload).cast("map<string,variant>"))
-          .as(Seq("part_key", "__pv")): _*)
-      .withColumn("part", to_json(col("__pv")))
-      .drop("__pv")
-
   /** `archive` format `csv` (processors/archive.adoc:26): fold typed
     * columns into one CSV document per group, header first, data rows
     * in batch order (`ord`). */
@@ -246,15 +237,4 @@ object BatchOps {
                    outCol: String = "seq"): DataFrame =
     df.withColumn(outCol,
       row_number().over(Window.partitionBy(key).orderBy(ord)).cast("long"))
-
-  /** `counter()` — GLOBAL sequence. A total order forces a single
-    * partition for the numbering window, so this is for small/driver-
-    * bounded flows only; at scale use [[namedCounter]] (per-key) or
-    * `monotonically_increasing_id` (unique + partition-monotonic,
-    * not dense).
-    */
-  def globalCounter(df: DataFrame, ord: Column,
-                    outCol: String = "seq"): DataFrame =
-    df.withColumn(outCol,
-      row_number().over(Window.orderBy(ord)).cast("long"))
 }

@@ -11,6 +11,19 @@ import org.apache.spark.sql.functions._
   * We adopt the same discipline: an `error: string` column (null =
   * healthy), never exceptions in executors — a single poisoned record
   * must not kill a 1000-executor job.
+  *
+  * Flow control never splits the frame by the flag. The config nodes
+  * ([[graft.config.Processors]]) run each child as a guarded step: the
+  * child processes the rows its guard selects, and every other row
+  * comes out unchanged and runs no side effect. `try` guards its
+  * children by `error IS NULL`, `catch` by a flag set once at entry,
+  * `switch` by the case index [[switch]] computes once, `retry` by a
+  * flag re-set after each pass. A processor that honours the guard in
+  * its own projection or row loop is row-local, and a chain of those
+  * is one pass over the input in batch and stream alike; any other
+  * processor reads its input once per slice through the adapter. The
+  * column forms here are the same single-pass shapes for callers that
+  * bind columns directly.
   */
 object FlowControl {
 
@@ -43,17 +56,6 @@ object FlowControl {
           .otherwise(when(failed, errMsg)))
   }
 
-  /** `catch` (catch.adoc:26): apply recovery to errored rows only, then
-    * clear the error flag.
-    */
-  def catchErrors(df: DataFrame, recover: DataFrame => DataFrame): DataFrame = {
-    val d = withErrorChannel(df)
-    val ok = d.filter(col(ErrorCol).isNull)
-    val bad = recover(d.filter(col(ErrorCol).isNotNull))
-      .withColumn(ErrorCol, lit(null).cast("string"))
-    ok.unionByName(bad)
-  }
-
   /** `reject_errored` (outputs/reject_errored.adoc:26): split healthy
     * from errored.
     */
@@ -61,16 +63,6 @@ object FlowControl {
     val d = withErrorChannel(df)
     (d.filter(col(ErrorCol).isNull), d.filter(col(ErrorCol).isNotNull))
   }
-
-  /** `noop` (processors/noop.adoc:26): identity. */
-  def noop(df: DataFrame): DataFrame = df
-
-  /** `for_each` (processors/for_each.adoc:26): apply children to each
-    * message as a singleton batch — Spark's default row-wise semantics,
-    * so this is plan composition.
-    */
-  def forEach(df: DataFrame, children: DataFrame => DataFrame): DataFrame =
-    children(df)
 
   /** `parallel` (processors/parallel.adoc:26): concurrent per-message
     * processing with a parallelism cap → executor parallelism; the cap
@@ -80,12 +72,6 @@ object FlowControl {
   def parallel(df: DataFrame, children: DataFrame => DataFrame,
                cap: Option[Int] = None): DataFrame =
     children(cap.map(df.repartition(_)).getOrElse(df))
-
-  /** `processors` grouping container (processors/processors.adoc:26):
-    * sequential plan composition.
-    */
-  def processors(stages: Seq[DataFrame => DataFrame]): DataFrame => DataFrame =
-    stages.reduceOption(_ andThen _).getOrElse(identity)
 
   /** `while` (processors/while.adoc:26): re-apply `body` while the
     * driver-evaluated predicate holds, up to `maxIters` (the reference
@@ -104,22 +90,6 @@ object FlowControl {
       i += 1
     }
     cur
-  }
-
-  /** `retry` (processors/retry.adoc:26): re-run a side-effecting action
-    * (an external write/call) with exponential backoff. For per-row
-    * transforms the error-channel discipline applies instead.
-    */
-  def retry[T](attempts: Int, initialBackoffMs: Long = 100)(action: => T): T = {
-    var delay = initialBackoffMs
-    var last: Throwable = null
-    var i = 0
-    while (i < attempts) {
-      try return action
-      catch { case t: Throwable => last = t; Thread.sleep(delay); delay *= 2 }
-      i += 1
-    }
-    throw last
   }
 
   /** `workflow` (processors/workflow.adoc:25-90): a DAG of named

@@ -9,7 +9,6 @@ import org.apache.spark.sql.{Column, DataFrame, GraftListenerBus, Observation,
   SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Observability surface (SURVEY.md §2 #11/#70): the reference's
@@ -66,22 +65,29 @@ object Observe {
   /** `log` (processors/log.adoc:26): sampled row logging as a
     * pass-through — logs at most one row per `every` within each
     * partition, on the executor's stderr (a per-message driver log
-    * would serialize the pipeline).
+    * would serialize the pipeline). Only rows where `guard` holds count
+    * and log (all rows when None).
     */
-  def logSample(df: DataFrame, every: Long, prefix: String): DataFrame = {
+  def logSample(df: DataFrame, every: Long, prefix: String,
+                guard: Option[Column] = None): DataFrame = {
     import org.apache.spark.sql.Encoders
-    implicit val enc = Encoders.row(df.schema)
-    df.mapPartitions { it =>
+    val d = guard.fold(df)(df.withColumn("__log_g", _))
+    implicit val enc = Encoders.row(d.schema)
+    val gIdx = if (guard.isEmpty) -1 else d.schema.fieldIndex("__log_g")
+    val out = d.mapPartitions { it =>
       var i = 0L
       it.map { r =>
-        if (i % every == 0)
-          // scalastyle:off println
-          System.err.println(s"[$prefix] ${r.toString.take(500)}")
-          // scalastyle:on println
-        i += 1
+        if (gIdx < 0 || r.get(gIdx) == true) {
+          if (i % every == 0)
+            // scalastyle:off println
+            System.err.println(s"[$prefix] ${r.toString.take(500)}")
+            // scalastyle:on println
+          i += 1
+        }
         r
       }
     }
+    if (gIdx >= 0) out.drop("__log_g") else out
   }
 
   /** Tracer analog (reference tracers — jaeger/open_telemetry_collector,
@@ -244,24 +250,5 @@ object Observe {
         shuffleReadBytes.get, shuffleWriteBytes.get, spillBytes.get,
         busyMs.get, phaseMs.map { case (p, v) => p -> v.get })
     }
-  }
-
-  /** Streaming metrics: forward every progress event (rows/sec, batch
-    * durations, watermark) to `sink` — the Spark analog of the
-    * reference's metrics components (docs/modules/components/pages/
-    * metrics/about.adoc:26).
-    */
-  def attachStreamingMetrics(spark: SparkSession,
-                             sink: String => Unit): StreamingQueryListener = {
-    val l = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
-        sink(s"""{"event":"started","id":"${e.id}","name":"${Option(e.name).getOrElse("")}"}""")
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-        sink(e.progress.json)
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-        sink(s"""{"event":"terminated","id":"${e.id}"}""")
-    }
-    spark.streams.addListener(l)
-    l
   }
 }

@@ -187,20 +187,6 @@ object Sinks {
       }
   }
 
-  /** Kafka sink plumbing (outputs/kafka.adoc / output_redpanda.go:87);
-    * needs the spark-sql-kafka connector jar at runtime.
-    */
-  def kafkaStream(df: DataFrame, bootstrapServers: String, topic: String,
-                  checkpoint: String): StreamingQuery = {
-    LocalCheckpointFileManager.install(df.sparkSession)
-    df.select(col(Envelope.ValueCol).cast("binary").as("value"))
-      .writeStream.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrapServers)
-      .option("topic", topic)
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
-
   // ── combinators (work for batch via the write functions) ──────────────
 
   /** `broker` fan_out: write the same data to every sink. The input is
@@ -241,16 +227,6 @@ object Sinks {
     }
     if (!ok) throw new RuntimeException(
       s"all ${sinks.length} fallback outputs failed: ${errs.map(_.getMessage).mkString("; ")}")
-  }
-
-  /** `reject_errored`: healthy rows to `sink`, errored rows to `reject`. */
-  def rejectErrored(df: DataFrame, sink: DataFrame => Unit,
-                    reject: DataFrame => Unit): Unit = {
-    val d = Envelope.ensure(df).persist()
-    try {
-      sink(d.filter(col(Envelope.ErrorCol).isNull))
-      reject(d.filter(col(Envelope.ErrorCol).isNotNull))
-    } finally { d.unpersist(); () }
   }
 
   /** `drop_on`/`drop`: rows matching the predicate are discarded. */

@@ -318,6 +318,38 @@ class AgentSpec extends SparkSpec {
       .at("/result/isError").asBoolean())
   }
 
+  test("an mcp cache and a pipeline cache processor share one store") {
+    val dir = Files.createTempDirectory("mcp_repo_shared")
+    val caches = dir.resolve("resources/caches")
+    Files.createDirectories(caches)
+    Files.writeString(caches.resolve("shared.yaml"),
+      """label: mcp_shared
+        |meta:
+        |  mcp:
+        |    enabled: true
+        |    description: shared cache
+        |memory: {}
+        |""".stripMargin)
+    val srv = new graft.mcp.McpServer(spark, dir.toString)
+    def call(tool: String, args: String): com.fasterxml.jackson.databind.JsonNode =
+      mapper.readTree(srv.handle(
+        s"""{"jsonrpc":"2.0","id":1,"method":"tools/call","params":{"name":"$tool","arguments":$args}}""").get)
+    assert(!call("set-mcp_shared", """{"key":"from_mcp","value":"m1"}""")
+      .at("/result/isError").asBoolean())
+    // the pipeline reads the tool's write and writes one of its own
+    val got = graft.config.Pipeline.build(spark,
+      """input:
+        |  generate: { count: 1, mapping: 'root = "x"' }
+        |pipeline:
+        |  processors:
+        |    - cache: { resource: mcp_shared, operator: get, key: from_mcp }
+        |    - cache: { resource: mcp_shared, operator: set, key: from_pipeline, value: p1 }
+        |""".stripMargin).select("value", "error").collect()
+    assert(got.map(r => (r.getString(0), r.getString(1))).toSeq == Seq(("m1", null)))
+    assert(call("get-mcp_shared", """{"key":"from_pipeline"}""")
+      .at("/result/content/0/text").asText == "p1")
+  }
+
   test("mcp input tool drain cap (meta.mcp.max_rows)") {
     val dir = Files.createTempDirectory("mcp_repo_drain")
     val inputs = dir.resolve("resources/inputs")

@@ -1,13 +1,11 @@
 package graft.operators
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
 /** Flow-control operators not exercised by the oracle queries:
-  * while-loop iteration, retry backoff, and processor composition.
+  * while-loop iteration.
   */
 class FlowControlSpec extends SparkSpec {
 
@@ -21,34 +19,5 @@ class FlowControlSpec extends SparkSpec {
         when(col("x") > 10, (col("x") / 2).cast("int")).otherwise(col("x"))),
       maxIters = 20)
     assert(out.collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 9, 10))
-  }
-
-  test("retry retries transient failures with backoff and then succeeds") {
-    val attempts = new AtomicInteger(0)
-    val result = FlowControl.retry(attempts = 5, initialBackoffMs = 1) {
-      if (attempts.incrementAndGet() < 3)
-        throw new RuntimeException("transient")
-      "ok"
-    }
-    assert(result == "ok" && attempts.get == 3)
-  }
-
-  test("retry exhausts attempts and rethrows") {
-    val e = intercept[RuntimeException] {
-      FlowControl.retry(attempts = 2, initialBackoffMs = 1) {
-        throw new RuntimeException("permanent")
-      }
-    }
-    assert(e.getMessage == "permanent")
-  }
-
-  test("processors composes stages in order") {
-    import spark.implicits._
-    val pipeline = FlowControl.processors(Seq(
-      d => d.withColumn("x", col("x") + 1),
-      d => d.filter(col("x") % 2 === 0),
-      d => d.withColumn("x", col("x") * 10)))
-    val out = pipeline(Seq(1, 2, 3).toDF("x")).collect().map(_.getInt(0)).sorted
-    assert(out.toSeq == Seq(20, 40))
   }
 }

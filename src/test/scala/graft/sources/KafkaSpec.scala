@@ -191,6 +191,46 @@ class KafkaSpec extends SparkSpec {
     assert(got == Seq("""{"n":1}"""))
   }
 
+  test("mixed address lists: the stream form reads the mem:// entry too") {
+    val addr = fresh(1, "src")
+    Broker.transportFor(addr)
+      .append("src", 0, Seq(Broker.Record(null, """{"n":2}""".getBytes)))
+    val q = graft.config.Pipeline.runStream(spark,
+      s"""input:
+         |  kafka:
+         |    seed_brokers: [broker-a:9092, $addr]
+         |    topics: [src]
+         |output:
+         |  memory: { name: mixed_addr_stream }
+         |""".stripMargin)
+    try {
+      q.processAllAvailable()
+      val got = spark.table("mixed_addr_stream").select($"value").as[String]
+        .collect().toSeq
+      assert(got == Seq("""{"n":2}"""))
+    } finally q.stop()
+  }
+
+  test("mixed address lists: the output writes to the mem:// entry") {
+    val src = fresh(1, "src")
+    val dst = fresh(1, "dst")
+    Broker.transportFor(src)
+      .append("src", 0, Seq(Broker.Record(null, """{"n":3}""".getBytes)))
+    graft.config.Pipeline.run(spark,
+      s"""input:
+         |  kafka:
+         |    seed_brokers: [$src]
+         |    topics: [src]
+         |output:
+         |  kafka:
+         |    seed_brokers: [broker-a:9092, $dst]
+         |    topic: dst
+         |""".stripMargin)
+    val got = Sources.brokerRead(spark, dst, "dst").select($"value").as[String]
+      .collect().toSeq
+    assert(got == Seq("""{"n":3}"""))
+  }
+
   test("config runner: kafka input → processors → kafka output round-trip") {
     val in = fresh(2, "src")
     val out = fresh(2, "dst")
